@@ -4,9 +4,9 @@ The (t, prefix) shuffle key is the \\x1f-joined state string — O(depth)
 bytes per row, O(T²) bytes per sequence across levels — which is the plan
 you would NOT want at 10³-10⁴-turn transcripts (round-5 verdict). The
 constant-width xxhash64-chain path (``hashed=True``,
-prefix_tree._hashed_key_rows) is the production default for deep
-sequences; string keys remain the default only because they are portable
-to the DuckDB oracle (the driver's correctness gate re-derives them).
+_tree._hashed_key_rows) is the opt-in scale path for deep sequences; it
+defaults to ``False`` because string keys are portable to the DuckDB
+oracle (the oracle SQL re-derives them).
 
 Run: python scripts/bench_hashed_keys.py  [n_convs turns]
 Prints one JSON line with wall times and a ratio.

@@ -52,68 +52,25 @@ length (all substrings — the reference inserts T suffixes of length
 O(T)); ``suffix_tree_stats`` therefore takes ``max_len`` to bound it to
 n-gram statistics (rows = T·max_len per sequence), the right shape for
 10⁴-turn transcripts.
+
+The computation is the direction-parameterized core in ``_tree`` run
+backwards (from_end=True: key rows by suffix, scan for LOW z in year
+order); this module names the columns (level ``k``, ``converged``,
+``first_convergence_t``). Only ``suffix_tree_stats`` builds its own rows:
+it counts substrings, not suffixes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-SEP = "\x1f"  # unit separator: cannot appear in state labels (validated at ingest)
-
-# persisted internal frames (registry pattern shared with prefix_tree)
-_LIVE_SUFFIX_CACHES: list[DataFrame] = []
-
-
-def release_suffix_caches() -> int:
-    n = 0
-    while _LIVE_SUFFIX_CACHES:
-        try:
-            _LIVE_SUFFIX_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def _suffix_rows(
-    df: DataFrame,
-    seq_col: str = "seq_id",
-    order_col: str = "pos",
-    state_col: str = "state",
-    hashed: bool = False,
-) -> DataFrame:
-    """(seq_id, k, suffix) — one row per sequence position; k = number of
-    positions from here to the end (suffix LENGTH, the "time index from
-    end"), suffix = the states from this position through the end, joined
-    with SEP. One window pass. ``hashed=True`` swaps the string key for
-    the constant-width incremental xxhash64 chain over the REVERSED
-    states (prefix_tree._hashed_key_rows — the scale path for long
-    sequences; loses oracle portability)."""
-    if hashed:
-        from sequenzo_spark.operators.prefix_tree import _hashed_key_rows
-
-        return _hashed_key_rows(
-            df, seq_col, order_col, state_col, True
-        ).select("seq_id", F.col("t").alias("k"), F.col("prefix").alias("suffix"))
-    # Descending order with an UNBOUNDED-PRECEDING frame, then reverse:
-    # Spark evaluates unbounded-FOLLOWING (shrinking) frames by
-    # re-aggregating the whole frame for EVERY row — O(T²) collect_list
-    # work per sequence — while the unbounded-preceding frame grows
-    # incrementally (O(T)); the reverse restores ascending suffix order.
-    # k = rows from here to the end = row_number in descending order.
-    wd = (
-        Window.partitionBy(seq_col)
-        .orderBy(F.col(order_col).desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wr = Window.partitionBy(seq_col).orderBy(F.col(order_col).desc())
-    return df.select(
-        F.col(seq_col).alias("seq_id"),
-        F.row_number().over(wr).cast("long").alias("k"),  # long like the old count()
-        F.concat_ws(
-            SEP, F.reverse(F.collect_list(state_col).over(wd))
-        ).alias("suffix"),
-    )
+from sequenzo_spark.operators import _tree
+from sequenzo_spark.operators._tree import (  # noqa: F401  (public names)
+    SEP,
+    release_caches as release_suffix_caches,
+    select_by_score,
+    starts_of,
+)
 
 
 def suffix_tree_stats(
@@ -156,21 +113,13 @@ def suffix_tree_stats(
             t.alias("t"), F.concat_ws(SEP, F.slice("_w", 1, t)).alias("g")
         ),
     )
-    per_t = (
-        # explode_outer: grams is non-empty for every position row and
-        # outer explode stops InferFiltersFromGenerate from duplicating
-        # the gram-building expression into a pre-filter
-        rows.select(F.explode_outer(grams).alias("e"))
-        .select(F.col("e.t").alias("t"), F.col("e.g").alias("g"))
-        .groupBy("t")
-        .agg(F.countDistinct("g").alias("n_suffixes"))
+    # explode_outer: grams is non-empty for every position row and outer
+    # explode stops InferFiltersFromGenerate from duplicating the
+    # gram-building expression into a pre-filter
+    gram_rows = rows.select(F.explode_outer(grams).alias("e")).select(
+        F.col("e.t").alias("t"), F.col("e.g").alias("g")
     )
-    wl = Window.orderBy("t")  # max-length rows — un-partitioned is fine
-    prev = F.lag("n_suffixes").over(wl)
-    mf = F.when(prev.isNull(), F.lit(0.0)).otherwise(
-        F.col("n_suffixes").cast("double") / prev.cast("double")
-    )
-    return per_t.select("t", "n_suffixes", mf.alias("merging_factor"))
+    return _tree.level_counts(gram_rows, "g", "n_suffixes", "merging_factor")
 
 
 def spell_suffix_stats(
@@ -185,17 +134,12 @@ def spell_suffix_stats(
     the spell tree inserts one reversed sequence per individual, so its
     level-k keys are exactly the distinct length-k sequence suffixes).
     Feed ``spell_table`` output (order_col="spell_id") for spell mode."""
-    per_k = (
-        _suffix_rows(df, seq_col, order_col, state_col)
-        .groupBy("k")
-        .agg(F.countDistinct("suffix").alias("n_suffixes"))
-    )
-    wl = Window.orderBy("k")
-    prev = F.lag("n_suffixes").over(wl)
-    mf = F.when(prev.isNull(), F.lit(0.0)).otherwise(
-        F.col("n_suffixes").cast("double") / prev.cast("double")
-    )
-    return per_k.select("k", "n_suffixes", mf.alias("merging_factor"))
+    return _tree.level_counts(
+        _tree._prefix_rows(df, seq_col, order_col, state_col, from_end=True),
+        "prefix",
+        "n_suffixes",
+        "merging_factor",
+    ).withColumnRenamed("t", "k")
 
 
 def suffix_rarity(
@@ -212,182 +156,9 @@ def suffix_rarity(
     within-group variant compute_path_uniqueness_by_group_suffix, :1626 —
     freq and N computed inside each group). The rarity sum folds in
     ascending-k order for bit-deterministic output."""
-    gcols = [group_col] if group_col else []
-    sfx = _suffix_rows(df, seq_col, order_col, state_col, hashed)
-    if group_col:
-        grp = df.groupBy(F.col(seq_col).alias("seq_id")).agg(
-            F.first(group_col).alias(group_col)
-        )
-        sfx = sfx.join(grp, "seq_id")
-    # freq as a window count over (k, suffix) + N from the base table: ONE
-    # evaluation of the per-sequence suffix window pass instead of three
-    # (the groupBy + re-join + distinct-N each re-derived it — guide §2.4)
-    joined = sfx.withColumn(
-        "freq", F.count(F.lit(1)).over(Window.partitionBy(*gcols, "k", "suffix"))
+    return _tree.rarity_fold(
+        df, seq_col, order_col, state_col, group_col, hashed, True
     )
-    if group_col:
-        n_seqs = df.groupBy(F.col(group_col)).agg(
-            F.countDistinct(F.col(seq_col)).alias("_n")
-        )
-        joined = joined.join(F.broadcast(n_seqs), gcols)
-    else:
-        n_seqs = df.agg(F.countDistinct(F.col(seq_col)).alias("_n"))
-        joined = joined.crossJoin(F.broadcast(n_seqs))
-    rar = -F.log(
-        F.col("freq").cast("double") / F.col("_n").cast("double")
-        + F.lit(1e-10)
-    )
-    per_seq = joined.groupBy("seq_id", *gcols).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("k").alias("k"), rar.alias("r")))
-        ).alias("_rs"),
-        F.sum(F.when(F.col("freq") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("path_uniqueness"),
-    )
-    score = (
-        F.aggregate(F.col("_rs"), F.lit(0.0), lambda acc, s: acc + s["r"])
-        + 0.0  # normalize -0.0
-    )
-    return per_seq.select(
-        "seq_id", *gcols, score.alias("rarity_score"), "path_uniqueness"
-    )
-
-
-def select_by_score(
-    scored: DataFrame,
-    score_col: str,
-    direction: str,
-    method: str,
-    proportion: float | None,
-    quantile_p: float | None,
-    min_count: int,
-    group_col: str | None = None,
-    cache_registry: list | None = None,
-) -> DataFrame:
-    """Rank/quantile selection over an aggregated standardized score —
-    the reference's "top_proportion" / "quantile" branches
-    (suffix_tree/individual_level_indicators.py:181-245,
-    prefix_tree/individual_level_indicators.py:97-245), shared by suffix
-    convergence (direction="low": smallest scores selected) and prefix
-    divergence (direction="high": largest selected).
-
-    top_proportion: k = clamp(floor(p·n_valid), min_count, n_valid) per
-    group (global when no group); the k most extreme finite scores are
-    flagged. The reference breaks score ties by input order (stable
-    argsort); here ties break by seq_id — identical whenever input order
-    is seq_id order. quantile: flag scores beyond the linear-interpolated
-    quantile (numpy nanquantile default), ≤ for "low", ≥ for "high".
-    Null scores are never selected. Adds an int ``selected`` column and a
-    ``_thr`` column (the selection threshold = the most extreme NON-selected
-    boundary value: worst selected score for top_proportion, the quantile
-    for quantile — callers use it for first-crossing logic and drop it).
-
-    Scale shape (round-6 rewrite): the UNGROUPED paths derive the
-    threshold from AGGREGATES — count + bounded per-partition top-k for
-    the k-th order statistic, or an exact percentile aggregate — then
-    select by plain comparison; the only remaining rank runs over the
-    TIE rows at the threshold boundary (normally ~1 row). The previous
-    ``Window.partitionBy()`` funnelled EVERY per-sequence score through
-    one task (the round-5 verdict's scale-killer). The grouped paths keep
-    per-group windows (bounded by group size)."""
-    if direction not in ("low", "high"):
-        raise ValueError("direction must be 'low' or 'high'")
-    low = direction == "low"
-    sc = F.col(score_col)
-    if method in ("top_proportion", "topk", "proportion", "rank"):
-        p = 0.10 if proportion is None else float(proportion)
-        if group_col:
-            wg = Window.partitionBy(group_col)
-            order = (
-                [sc.asc_nulls_last(), F.col("seq_id").asc()]
-                if low
-                else [sc.desc_nulls_last(), F.col("seq_id").desc()]
-            )
-            wr = wg.orderBy(*order)
-            n_valid = F.sum(F.when(sc.isNotNull(), 1).otherwise(0)).over(wg)
-            kk = F.greatest(
-                F.floor(F.lit(p) * n_valid), F.lit(int(min_count))
-            )
-            kk = F.least(kk, n_valid)
-            sel = (F.row_number().over(wr) <= kk) & sc.isNotNull()
-            out = scored.withColumn("selected", sel.cast("int"))
-            thr = (F.max if low else F.min)(
-                F.when(F.col("selected") == 1, sc)
-            ).over(wg)
-            return out.withColumn("_thr", thr)
-        import math
-
-        # aggregate-derived threshold: the selected set is {score strictly
-        # more extreme than s*} ∪ {the first (k − |strict|) boundary ties
-        # by seq_id}, where s* = the k-th most extreme score. s* is exactly
-        # the worst selected score, i.e. the old window formulation's
-        # max/min-over-selected threshold.
-        # register in the CALLER's registry (prefix callers release via
-        # release_prefix_caches — a suffix-only registration would leak a
-        # live cache across that release, letting a re-built identical
-        # plan silently reuse it: the round-3 cache-assisted-warm trap)
-        cached = scored.persist()
-        (_LIVE_SUFFIX_CACHES if cache_registry is None else cache_registry).append(cached)
-        n_valid = cached.where(sc.isNotNull()).count()
-        k = min(max(math.floor(p * n_valid), int(min_count)), n_valid)
-        if k <= 0:
-            return cached.withColumn("selected", F.lit(0)).withColumn(
-                "_thr", F.lit(None).cast("double")
-            )
-        s_star = (
-            cached.where(sc.isNotNull())
-            .select(sc.alias("_s"))
-            .orderBy(F.col("_s").asc() if low else F.col("_s").desc())
-            .limit(k)
-            .agg((F.max if low else F.min)("_s").alias("_s"))
-            .first()[0]
-        )
-        strict = (sc < F.lit(s_star)) if low else (sc > F.lit(s_star))
-        budget = k - cached.where(strict).count()
-        # boundary ties ranked by seq_id via TakeOrdered (bounded per-
-        # partition top-k, no single-partition exchange anywhere)
-        tie_sel = (
-            cached.where(sc == F.lit(s_star))
-            .select("seq_id")
-            .orderBy(F.col("seq_id").asc() if low else F.col("seq_id").desc())
-            .limit(int(budget))
-            .select("seq_id", F.lit(1).alias("_tie_sel"))
-        )
-        out = cached.join(F.broadcast(tie_sel), "seq_id", "left")
-        sel = sc.isNotNull() & (strict | F.col("_tie_sel").isNotNull())
-        return (
-            out.withColumn("selected", sel.cast("int"))
-            .withColumn("_thr", F.lit(float(s_star)))
-            .drop("_tie_sel")
-        )
-    if method == "quantile":
-        q = (
-            (0.10 if low else 0.90)
-            if quantile_p is None
-            else float(quantile_p)
-        )
-        if group_col:
-            wg = Window.partitionBy(group_col)
-            xq = F.expr(f"percentile({score_col}, {q!r})").over(wg)
-            sel = ((sc <= xq) if low else (sc >= xq)) & sc.isNotNull()
-            return scored.withColumn("selected", sel.cast("int")).withColumn(
-                "_thr", xq
-            )
-        # exact percentile as an AGGREGATE (identical value to the old
-        # whole-frame window percentile: same function, same multiset),
-        # broadcast back — no single-partition window
-        cached = scored.persist()
-        (_LIVE_SUFFIX_CACHES if cache_registry is None else cache_registry).append(cached)
-        thr_df = cached.agg(
-            F.expr(f"percentile({score_col}, {q!r})").alias("_thr")
-        )
-        out = cached.crossJoin(F.broadcast(thr_df))
-        sel = (
-            (sc <= F.col("_thr")) if low else (sc >= F.col("_thr"))
-        ) & sc.isNotNull()
-        return out.withColumn("selected", sel.cast("int"))
-    raise ValueError(f"unknown selection method: {method!r}")
 
 
 def suffix_convergence(
@@ -414,7 +185,7 @@ def suffix_convergence(
 
     rarity(i,k) = −ln(freq(suffix_{i,k})/N + 1e-10); z(i,k) standardizes
     rarity across individuals per level k with SAMPLE std (ddof=1);
-    zero-variance levels (EXACT distinct-count test) and single-row
+    zero-variance levels (exact min == max test) and single-row
     levels give null z. Per individual the z's are scanned in YEAR order
     (t = L_i − k + 1, i.e. start position of the suffix): over start
     years p ∈ [min_t, L−window+1], windows of ``window`` consecutive z's
@@ -436,177 +207,11 @@ def suffix_convergence(
     inside each group, and rank/quantile selections run per group.
 
     Output: seq_id, [group], std_score, converged, first_convergence_t."""
-    if min_t < 1 or window < 1:
-        raise ValueError("min_t and window must be >= 1")
-    if max_t is not None and max_t < min_t:
-        raise ValueError("max_t must be >= min_t")
-    gcols = [group_col] if group_col else []
-    sfx = _suffix_rows(df, seq_col, order_col, state_col)
-    if group_col:
-        grp = df.groupBy(F.col(seq_col).alias("seq_id")).agg(
-            F.first(group_col).alias(group_col)
-        )
-        sfx = sfx.join(grp, "seq_id")
-    # freq via window count + base-table N (see suffix_rarity): one
-    # evaluation of the suffix window pass instead of three
-    joined = sfx.withColumn(
-        "freq", F.count(F.lit(1)).over(Window.partitionBy(*gcols, "k", "suffix"))
-    )
-    if group_col:
-        n_seqs = df.groupBy(F.col(group_col)).agg(
-            F.countDistinct(F.col(seq_col)).alias("_n")
-        )
-        joined = joined.join(F.broadcast(n_seqs), gcols)
-    else:
-        n_seqs = df.agg(F.countDistinct(F.col(seq_col)).alias("_n"))
-        joined = joined.crossJoin(F.broadcast(n_seqs))
-    rar = joined.select(
-        "seq_id",
-        *gcols,
-        "k",
-        (
-            -F.log(
-                F.col("freq").cast("double") / F.col("_n").cast("double")
-                + F.lit(1e-10)
-            )
-        ).alias("r"),
-    )
-    if persist_stats:
-        rar = rar.persist()
-        _LIVE_SUFFIX_CACHES.append(rar)
-    # per-level moments: bounded-state partial sums with the TWO-PASS
-    # variance Σ(r−m)²/(cnt−1) (same rationale as prefix_divergence: the
-    # one-pass form cancels catastrophically near zero variance and its
-    # sign flips with summation order → NaN z)
-    kcols = gcols + ["k"]
-    # zero-variance test min==max replaces countDistinct: same exact truth
-    # (finite doubles, no NaN) without the distinct rewrite's double pass
-    mstats = rar.groupBy(*kcols).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("r").alias("s1"),
-        (F.min("r") == F.max("r")).alias("zv"),
-    )
-    dev = F.col("r") - F.col("s1") / F.col("cnt")
-    stats = (
-        rar.join(F.broadcast(mstats), kcols)
-        .groupBy(*kcols)
-        .agg(F.sum(dev * dev).alias("ss"))
-        .join(F.broadcast(mstats), kcols)
-    )
-    m = F.col("s1") / F.col("cnt")
-    z = F.when(
-        F.col("zv") | (F.col("cnt") < 2), F.lit(None).cast("double")
-    ).otherwise((F.col("r") - m) / F.sqrt(F.col("ss") / (F.col("cnt") - 1)))
-    zrows = rar.join(F.broadcast(stats), kcols).select(
-        "seq_id", *gcols, "k", z.alias("z")
-    )
-    # year order: t = L − k + 1 ⇔ descending k; sort by −k ascending
-    per = zrows.groupBy("seq_id", *gcols).agg(
-        F.array_sort(
-            F.collect_list(F.struct((-F.col("k")).alias("nk"), F.col("z")))
-        ).alias("_zs")
-    )
-    w = int(window)
-    # STAGED projections (round-6, mirror of prefix_divergence): za and the
-    # candidate-window array are each computed ONCE into a column —
-    # interpreted HOFs get no common-subexpression elimination, so the flat
-    # form re-evaluated the transform/filter chain per output column and
-    # the za transform per lambda invocation (O(T²) per row).
-    staged = per.select(
-        "seq_id",
-        *gcols,
-        F.transform(F.col("_zs"), lambda s: s["z"]).alias("_za"),
-    )
-    zac = F.col("_za")
-    cands_expr = F.filter(
-        F.transform(
-            starts_of(zac, min_t, w, max_t),
-            lambda p: F.struct(
-                p.alias("p"), F.array_max(F.slice(zac, p, w)).alias("wmax")
-            ),
-        ),
-        lambda c: ~F.exists(F.slice(zac, c["p"], w), lambda x: x.isNull()),
-    )
-    staged = staged.select("seq_id", *gcols, cands_expr.alias("_cands"))
-    cands = F.col("_cands")
-    std_score = F.when(
-        F.size(cands) > 0,
-        F.array_min(F.transform(cands, lambda c: c["wmax"])),
-    )
-    if method == "zscore":
-        thr = F.lit(-float(z_threshold))
-        passed_expr = F.filter(
-            cands,
-            lambda c: (c["wmax"] <= thr) if inclusive else (c["wmax"] < thr),
-        )
-        staged = staged.select(
-            "seq_id", *gcols, cands, passed_expr.alias("_passed")
-        )
-        passed = F.col("_passed")
-        converged = F.when(F.size(passed) > 0, F.lit(1)).otherwise(F.lit(0))
-        first_t = F.when(
-            F.size(passed) > 0,
-            F.aggregate(
-                F.transform(passed, lambda c: c["p"]),
-                F.lit(2**31 - 1),
-                lambda acc, x: F.least(acc, x),
-            ),
-        ).otherwise(F.lit(0))
-        return staged.select(
-            "seq_id",
-            *gcols,
-            std_score.alias("std_score"),
-            converged.cast("long").alias("converged"),
-            first_t.cast("long").alias("first_convergence_t"),
-        )
-    # ``_cands`` rides through the selection so the first-crossing scan
-    # below reuses the staged array instead of rebuilding it from _zs
-    scored = staged.select(
-        "seq_id", *gcols, std_score.alias("std_score"), cands
-    )
-    # rank/quantile methods: select on std_score, then earliest window
-    # whose max z is ≤ the selection threshold (reference :449-560)
-    sel = select_by_score(
-        scored,
-        "std_score",
-        direction="low",
-        method=method,
-        proportion=proportion,
-        quantile_p=quantile_p,
-        min_count=min_count,
-        group_col=group_col,
-    )
-    # selection threshold: carried as the ``_thr`` column by select_by_score
-    # (worst selected score for top_proportion, the percentile for quantile)
-    hit = F.filter(F.col("_cands"), lambda c: c["wmax"] <= F.col("_thr"))
-    first_t = F.when(
-        (F.col("selected") == 1) & (F.size(hit) > 0),
-        F.aggregate(
-            F.transform(hit, lambda c: c["p"]),
-            F.lit(2**31 - 1),
-            lambda acc, x: F.least(acc, x),
-        ),
-    ).otherwise(F.lit(0))
-    return sel.select(
-        "seq_id",
-        *gcols,
-        "std_score",
-        F.col("selected").cast("long").alias("converged"),
-        first_t.cast("long").alias("first_convergence_t"),
-    )
-
-
-def starts_of(za, min_t: int, w: int, max_t: int | None = None):
-    """Window start years p ∈ [min_t, min(max_t, len(za)−w+1)] (empty when
-    the sequence is too short — F.sequence would otherwise DESCEND;
-    ``max_t`` is the reference's search-interval cap, default None →
-    T−window+1)."""
-    hi = F.size(za) - (w - 1)
-    if max_t is not None:
-        hi = F.least(hi, F.lit(int(max_t)))
-    return F.when(
-        hi >= int(min_t), F.sequence(F.lit(int(min_t)), hi)
-    ).otherwise(F.array().cast("array<int>"))
+    return _tree.divergence(
+        df, True, z_threshold, min_t, max_t, window, inclusive, method,
+        proportion, quantile_p, min_count, seq_col, order_col, state_col,
+        group_col, persist_stats,
+    ).withColumnsRenamed({"flag": "converged", "first_t": "first_convergence_t"})
 
 
 def suffix_rarity_per_level(
@@ -624,42 +229,6 @@ def suffix_rarity_per_level(
     ``zscore=True`` returns the columnwise ddof-1 z instead (null at
     zero-variance or single-row levels). Levels beyond a sequence's
     length are simply absent (the reference's NaN cells)."""
-    sfx = _suffix_rows(df, seq_col, order_col, state_col)
-    # freq via window count + base-table N (see suffix_rarity)
-    joined = sfx.withColumn(
-        "freq", F.count(F.lit(1)).over(Window.partitionBy("k", "suffix"))
-    )
-    n_seqs = df.agg(F.countDistinct(F.col(seq_col)).alias("_n"))
-    rar = joined.crossJoin(F.broadcast(n_seqs)).select(
-        "seq_id",
-        "k",
-        (
-            -F.log(
-                F.col("freq").cast("double") / F.col("_n").cast("double")
-                + F.lit(1e-10)
-            )
-        ).alias("rarity"),
-    )
-    if not zscore:
-        return rar
-    mstats = rar.groupBy("k").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("rarity").alias("s1"),
-        (F.min("rarity") == F.max("rarity")).alias("zv"),
-    )
-    dev = F.col("rarity") - F.col("s1") / F.col("cnt")
-    stats = (
-        rar.join(F.broadcast(mstats), "k")
-        .groupBy("k")
-        .agg(F.sum(dev * dev).alias("ss"))
-        .join(F.broadcast(mstats), "k")
-    )
-    m = F.col("s1") / F.col("cnt")
-    z = F.when(
-        F.col("zv") | (F.col("cnt") < 2), F.lit(None).cast("double")
-    ).otherwise(
-        (F.col("rarity") - m) / F.sqrt(F.col("ss") / (F.col("cnt") - 1))
-    )
-    return rar.join(F.broadcast(stats), "k").select(
-        "seq_id", "k", z.alias("rarity")
-    )
+    rar = _tree.rarity_rows(df, seq_col, order_col, state_col, from_end=True)
+    rar, col = (_tree.zscores(rar, []), "z") if zscore else (rar, "r")
+    return rar.select("seq_id", F.col("t").alias("k"), F.col(col).alias("rarity"))

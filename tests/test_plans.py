@@ -224,3 +224,61 @@ def test_suffix_convergence_broadcasts_level_stats(spark):
 
     plan = _plan(QUERIES["suffix_convergence"](spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 2, plan
+
+
+TREE_QUERIES = (
+    "prefix_tree_stats", "prefix_rarity", "prefix_divergence",
+    "prefix_divergence_topp", "spell_prefix_stats", "suffix_tree_stats",
+    "suffix_rarity", "suffix_convergence", "suffix_convergence_topp",
+    "spell_suffix_stats",
+)
+
+
+def test_topp_selection_job_count(spark):
+    """The ungrouped top_proportion selection reads s* (the k-th most
+    extreme score) and its tie budget (how often s* appears in the top k)
+    from one job: each topp query of ``driver_queries`` runs 24 Spark
+    jobs end to end, two fewer than with a separate strict-count action.
+    Group-less jobs submitted in the window (engine thread pools) are
+    counted too."""
+    from sequenzo_spark.driver_queries import QUERIES
+    from sequenzo_spark.operators.prefix_tree import release_prefix_caches
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    for q in ("prefix_divergence_topp", "suffix_convergence_topp"):
+        release_prefix_caches()
+        group = f"test-jobs-{q}"
+        loose = set(st.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            QUERIES[q](spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = len(st.getJobIdsForGroup(group))
+        n += len(set(st.getJobIdsForGroup(None)) - loose)
+        assert n == 24, (q, n)
+    release_prefix_caches()
+
+
+def test_tree_queries_leave_no_persisted_rdds(spark):
+    """Prefix and suffix operators share ONE cache registry, so either
+    release name drains what any tree query persisted (the topp queries
+    persist their rarity and scored frames). Every tree query plus
+    a release — the OTHER module's name, to pin the shared registry —
+    leaves no persisted RDD beyond those alive before the test."""
+    from sequenzo_spark.driver_queries import QUERIES
+    from sequenzo_spark.operators.prefix_tree import release_prefix_caches
+    from sequenzo_spark.operators.suffix_tree import release_suffix_caches
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    release_prefix_caches()
+    before = persisted()
+    for q in TREE_QUERIES:
+        QUERIES[q](spark, SF_DIR).collect()
+        (release_suffix_caches if q.startswith(("prefix", "spell_prefix"))
+         else release_prefix_caches)()
+        assert persisted() <= before, q

@@ -105,3 +105,37 @@ def test_fill_gaps_locf_and_linear_match_pandas(spark, series):
     ref_lin = ref.interpolate(method="index").ffill().bfill()
     for t, v in ref_lin.items():
         assert abs(got_lin[t.to_pydatetime()] - v) < 1e-6, ("linear", t)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(seq_strategy, min_size=1, max_size=8))
+def test_suffix_indicators_are_prefix_indicators_reversed(spark, seqs):
+    """A suffix is a prefix of the sequence read backwards — the identity
+    the shared prefix/suffix tree core is built on. Negating the order
+    column turns every suffix operator into its prefix counterpart,
+    EXACTLY (same frequencies, same level order in every fold). Compared
+    as value tuples: the suffix level ``k`` is a long, the prefix ``t`` an
+    int."""
+    from sequenzo_spark.operators.prefix_tree import (
+        prefix_rarity,
+        prefix_tree_stats,
+    )
+    from sequenzo_spark.operators.suffix_tree import (
+        spell_suffix_stats,
+        suffix_rarity,
+    )
+
+    rows = [
+        (f"s{i}", p + 1, s)
+        for i, states in enumerate(seqs)
+        for p, s in enumerate(states)
+    ]
+    df = spark.createDataFrame(rows, "seq_id string, pos int, state string")
+    rev = df.withColumn("pos", -F.col("pos"))
+
+    def values(frame):
+        return sorted(map(tuple, frame.collect()), key=repr)
+
+    assert values(suffix_rarity(df)) == values(prefix_rarity(rev))
+    assert values(spell_suffix_stats(df)) == values(prefix_tree_stats(rev))
