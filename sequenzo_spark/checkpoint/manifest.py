@@ -114,14 +114,11 @@ class Manifest:
         return df
 
 
-def partition_metrics(df: DataFrame, part_col: str) -> dict[str, tuple[int, int]]:
-    """Per-partition (rows, order-independent checksum) in one aggregation:
-    checksum = bit_xor(xxhash64(<all columns>))."""
-    cols = [c for c in df.columns]
-    agg = (
-        df.withColumn("_h", F.xxhash64(*cols))
-        .groupBy(part_col)
+def partition_metrics(df: DataFrame, *part_cols: str) -> DataFrame:
+    """Per-partition rows ``n`` and order-independent checksum ``cs`` =
+    bit_xor(xxhash64(<all columns>)), one aggregation keyed by ``part_cols``."""
+    return (
+        df.withColumn("_h", F.xxhash64(*df.columns))
+        .groupBy(*part_cols)
         .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(_h)").alias("cs"))
-        .collect()
     )
-    return {str(r[part_col]): (r["n"], r["cs"]) for r in agg}

@@ -1,23 +1,19 @@
 from sequenzo_spark.rollup.aggregates import (
+    TABLES,
     derive_distribution,
     derive_spell_stats,
     derive_transition_rates,
-    merge_spells,
-    merge_state_counts,
-    merge_transitions,
-    rollup_spells,
-    rollup_state_counts,
-    rollup_transitions,
+    merge,
+    merge_tier,
+    rollup_1m_fused,
 )
 from sequenzo_spark.rollup.cascade import run_cascade
 
 __all__ = [
-    "rollup_state_counts",
-    "rollup_transitions",
-    "rollup_spells",
-    "merge_state_counts",
-    "merge_transitions",
-    "merge_spells",
+    "TABLES",
+    "merge",
+    "merge_tier",
+    "rollup_1m_fused",
     "derive_distribution",
     "derive_transition_rates",
     "derive_spell_stats",

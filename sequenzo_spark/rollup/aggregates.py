@@ -1,12 +1,8 @@
 """Tier aggregates: algebraic state + derived views.
 
-The cascade stores ONLY algebraic quantities per tier —
-  state_counts:  (conv_bucket, time_bucket, state)        n_turns, w_sum
-  transitions:   (conv_bucket, time_bucket, from, to)     t_count, w_count
-  spells:        (conv_bucket, time_bucket, state)        n_spells, dur_sum,
-                                                          dur_sq_sum, dur_min,
-                                                          dur_max
-— all exactly re-mergeable (sums of integers / integer-valued doubles are
+The cascade stores ONLY algebraic quantities per tier — the counts, sums,
+sums of squares, minima and maxima that ``TABLES`` declares for
+state_counts, transitions and spells — all exactly re-mergeable (sums of integers / integer-valued doubles are
 associative-exact in float64 below 2^53, min/max trivially), which is what
 makes 1m→1h→1d bit-exact (SURVEY.md §4). Derived floats (freq, entropy,
 rates, means, variances) are recomputed from merged counts at every tier by
@@ -29,7 +25,7 @@ conv_bucket, which is itself an exact algebraic merge.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 BUCKET_EXPRS = {
@@ -45,106 +41,64 @@ def with_conv_bucket(df: DataFrame, conv_col: str = "conv_id", buckets: int = 32
     )
 
 
-# ------------------------------------------------------------ raw → tier
+# ------------------------------------------------------------ the tables
 
-def rollup_state_counts(
-    turns: DataFrame,
-    tier: str = "1m",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    weight_col: str | None = None,
-) -> DataFrame:
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    return (
-        turns.filter(F.col(state_col).isNotNull())
-        .groupBy(
-            "conv_bucket",
-            BUCKET_EXPRS[tier](F.col(ts_col)).alias("time_bucket"),
-            F.col(state_col).alias("state"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_turns"), F.sum(w).alias("w_sum"))
+# One definition per tier table: the keys beyond (conv_bucket, time_bucket),
+# then per measure its merge function and the measure ONE raw row carries
+# on its own (Spark SQL over that row). A raw row is thus the smallest tier
+# row, and raw→1m is the same merge as 1m→1h→1d.
+TABLES = {
+    "state_counts": (
+        ["state"],
+        {"n_turns": (F.sum, "1"), "w_sum": (F.sum, "1.0D")},
+    ),
+    "transitions": (
+        ["from_state", "to_state"],
+        {"t_count": (F.sum, "1"), "w_count": (F.sum, "1.0D")},
+    ),
+    "spells": (
+        ["state"],
+        {
+            "n_spells": (F.sum, "1"),
+            "dur_sum": (F.sum, "duration"),
+            "dur_sq_sum": (F.sum, "duration * duration"),
+            "dur_min": (F.min, "duration"),
+            "dur_max": (F.max, "duration"),
+        },
+    ),
+}
+
+
+def units(rows: DataFrame, table: str) -> DataFrame:
+    """Raw rows of ``table`` with the measures each carries on its own."""
+    return rows.withColumns(
+        {m: F.expr(unit) for m, (_, unit) in TABLES[table][1].items()}
     )
 
 
-def rollup_transitions(
-    turns: DataFrame,
-    tier: str = "1m",
-    seq_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Transition attributed to the bucket of the FROM turn. The lead() is
-    computed over the full sequence before bucketing, so bucket-boundary
-    transitions are never lost — merging buckets reproduces the global
-    matrix exactly."""
-    win = Window.partitionBy(seq_col).orderBy(order_col)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    pairs = turns.select(
-        "conv_bucket",
-        BUCKET_EXPRS[tier](F.col(ts_col)).alias("time_bucket"),
-        F.col(state_col).alias("from_state"),
-        F.lead(state_col).over(win).alias("to_state"),
-        w.alias("_w"),
-    ).filter(F.col("from_state").isNotNull() & F.col("to_state").isNotNull())
-    return pairs.groupBy(
-        "conv_bucket", "time_bucket", "from_state", "to_state"
-    ).agg(F.count(F.lit(1)).alias("t_count"), F.sum("_w").alias("w_count"))
-
-
-def rollup_spells(
-    turns: DataFrame,
-    tier: str = "1m",
-    seq_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Spell stats per (conv_bucket, bucket-of-spell-start, state)."""
-    from sequenzo_spark.operators.spells import spell_table
-
-    spells = spell_table(
-        turns,
-        seq_col=seq_col,
-        order_col=order_col,
-        state_col=state_col,
-        ts_col=ts_col,
-    )
-    # conv_bucket is a pure function of conv_id — recompute, never join.
-    salted = spells.withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64(F.col(seq_col)), F.lit(salt_buckets)).cast("int"),
-    )
-    return (
-        salted.groupBy(
-            "conv_bucket",
-            BUCKET_EXPRS[tier](F.col("ts_start")).alias("time_bucket"),
-            "state",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_spells"),
-            F.sum("duration").alias("dur_sum"),
-            F.sum(F.col("duration") * F.col("duration")).alias("dur_sq_sum"),
-            F.min("duration").alias("dur_min"),
-            F.max("duration").alias("dur_max"),
-        )
+def merge(df: DataFrame, table: str, bucket: Column, by: list[str]) -> DataFrame:
+    """Group by ``by``, ``bucket`` (as time_bucket) and the table's keys,
+    merging every measure with its ``TABLES`` function."""
+    keys, measures = TABLES[table]
+    return df.groupBy(*by, bucket.alias("time_bucket"), *keys).agg(
+        *(fn(m).alias(m) for m, (fn, _) in measures.items())
     )
 
 
-def rollup_1m_fused(
-    turns: DataFrame,
-    seq_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    weight_col: str | None = None,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """All three 1m tables from ONE window pass.
+def merge_tier(df: DataFrame, table: str, tier: str) -> DataFrame:
+    """Re-merge a lower tier of ``table`` into ``tier``'s time buckets."""
+    return merge(
+        df, table, BUCKET_EXPRS[tier](F.col("time_bucket")), ["conv_bucket"]
+    )
 
-    lead (transitions), lag (spell boundary) and the running spell_id share
-    the same (seq, order) window spec, so Catalyst plans a single Window
+
+# ------------------------------------------------------------ raw → 1m
+
+def rollup_1m_fused(turns: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """All three 1m tables from ONE window pass over (conv_id, turn_idx).
+
+    lead (transitions), lag (spell boundary) and row_number (spell length)
+    share the same (seq, order) window spec, so Catalyst plans a single Window
     node → exactly one shuffle by conv_id for the whole raw→1m stage; the
     enriched frame is persisted and the three aggregations read the cache.
 
@@ -152,129 +106,58 @@ def rollup_1m_fused(
     dropped (rows absent = void, SURVEY.md §1.1); LOCF-style fill happens
     upstream at encode if desired.
     """
-    w = Window.partitionBy(seq_col).orderBy(order_col)
-    wp = Window.partitionBy(seq_col)
-    prev = F.lag(state_col).over(w)
-    is_new = prev.isNull() | (prev != F.col(state_col))
-    # when unweighted, w_sum ≡ count (sums of 1.0 are exact integers in
-    # float64) — skip materializing a constant weight column in the persist.
-    cols = [
-        "conv_bucket",
-        F.col(seq_col).alias("_seq"),
-        F.col(state_col).alias("state"),
-        F.col(ts_col).alias("ts"),
-        F.lead(state_col).over(w).alias("next_state"),
-        is_new.alias("is_boundary"),
-        F.row_number().over(w).alias("_rk"),
-        F.count(F.lit(1)).over(wp).alias("_len"),
-    ]
-    if weight_col:
-        cols.insert(4, F.col(weight_col).alias("_w"))
-    enriched = turns.filter(F.col(state_col).isNotNull()).select(*cols).persist()
-
-    def wsum(alias):
-        return (
-            F.sum("_w").alias(alias)
-            if weight_col
-            else F.count(F.lit(1)).cast("double").alias(alias)
-        )
-
-    mb = F.date_trunc("minute", F.col("ts"))
-    sc = enriched.groupBy(
-        "conv_bucket", mb.alias("time_bucket"), "state"
-    ).agg(F.count(F.lit(1)).alias("n_turns"), wsum("w_sum"))
-    tr = (
-        enriched.filter(F.col("next_state").isNotNull())
-        .groupBy(
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    prev = F.lag("state").over(w)
+    enriched = (
+        turns.filter(F.col("state").isNotNull())
+        .select(
             "conv_bucket",
-            mb.alias("time_bucket"),
-            F.col("state").alias("from_state"),
-            F.col("next_state").alias("to_state"),
+            F.col("conv_id").alias("_seq"),
+            "state",
+            "ts",
+            F.lead("state").over(w).alias("next_state"),
+            (prev.isNull() | (prev != F.col("state"))).alias("is_boundary"),
+            F.row_number().over(w).alias("_rk"),
+            F.count(F.lit(1)).over(Window.partitionBy("conv_id")).alias("_len"),
         )
-        .agg(F.count(F.lit(1)).alias("t_count"), wsum("w_count"))
+        .persist()
+    )
+    pairs = enriched.filter(F.col("next_state").isNotNull()).select(
+        "conv_bucket",
+        "ts",
+        F.col("state").alias("from_state"),
+        F.col("next_state").alias("to_state"),
     )
     # spells without a per-(seq, spell) shuffle: each spell is its boundary
     # row; duration = next boundary's rank − own rank (or to end of seq).
     # The boundary-row lead() shares the (seq, order) partitioning of the
     # first window pass — no extra exchange of the wide data.
-    boundary = enriched.filter(F.col("is_boundary"))
     next_rk = F.lead("_rk").over(Window.partitionBy("_seq").orderBy("_rk"))
-    spells_rows = boundary.withColumn(
+    spells = enriched.filter(F.col("is_boundary")).withColumn(
         "duration", F.coalesce(next_rk, F.col("_len") + 1) - F.col("_rk")
     )
-    sp = spells_rows.groupBy(
-        "conv_bucket", mb.alias("time_bucket"), "state"
-    ).agg(
-        F.count(F.lit(1)).alias("n_spells"),
-        F.sum("duration").alias("dur_sum"),
-        F.sum(F.col("duration") * F.col("duration")).alias("dur_sq_sum"),
-        F.min("duration").alias("dur_min"),
-        F.max("duration").alias("dur_max"),
-    )
-    return enriched, {"state_counts": sc, "transitions": tr, "spells": sp}
-
-
-# ------------------------------------------------------- tier → tier merge
-
-def _remerge(df: DataFrame, tier: str, keys: list[str], aggs: list) -> DataFrame:
-    return df.groupBy(
-        "conv_bucket",
-        BUCKET_EXPRS[tier](F.col("time_bucket")).alias("time_bucket"),
-        *keys,
-    ).agg(*aggs)
-
-
-def merge_state_counts(df: DataFrame, tier: str) -> DataFrame:
-    return _remerge(
-        df,
-        tier,
-        ["state"],
-        [F.sum("n_turns").alias("n_turns"), F.sum("w_sum").alias("w_sum")],
-    )
-
-
-def merge_transitions(df: DataFrame, tier: str) -> DataFrame:
-    return _remerge(
-        df,
-        tier,
-        ["from_state", "to_state"],
-        [F.sum("t_count").alias("t_count"), F.sum("w_count").alias("w_count")],
-    )
-
-
-def merge_spells(df: DataFrame, tier: str) -> DataFrame:
-    return _remerge(
-        df,
-        tier,
-        ["state"],
-        [
-            F.sum("n_spells").alias("n_spells"),
-            F.sum("dur_sum").alias("dur_sum"),
-            F.sum("dur_sq_sum").alias("dur_sq_sum"),
-            F.min("dur_min").alias("dur_min"),
-            F.max("dur_max").alias("dur_max"),
-        ],
-    )
+    minute = BUCKET_EXPRS["1m"](F.col("ts"))
+    rows = {"state_counts": enriched, "transitions": pairs, "spells": spells}
+    return enriched, {
+        t: merge(units(df, t), t, minute, ["conv_bucket"]) for t, df in rows.items()
+    }
 
 
 # ------------------------------------------------------------ derivations
+# Each derivation first merges its table over conv_bucket (``by=[]``: one
+# row per time bucket and key), then computes floats from the merged state.
 
 def derive_distribution(
-    state_counts: DataFrame, n_states: int | None = None, per_conv_bucket: bool = False
+    state_counts: DataFrame, n_states: int | None = None
 ) -> DataFrame:
     """freq / entropy / modal per time bucket, derived from counts with a
     deterministic state-ordered fold (bit-stable at any parallelism).
 
     Entropy per seqstatd (:112-121); `+ 0.0` normalizes IEEE −0.0 so the
     stored bit pattern of a zero entropy is always that of +0.0."""
-    keys = ["conv_bucket", "time_bucket"] if per_conv_bucket else ["time_bucket"]
-    rolled = state_counts
-    if not per_conv_bucket:
-        rolled = state_counts.groupBy("time_bucket", "state").agg(
-            F.sum("n_turns").alias("n_turns"), F.sum("w_sum").alias("w_sum")
-        )
+    rolled = merge(state_counts, "state_counts", F.col("time_bucket"), [])
     arr = F.array_sort(F.collect_list(F.struct("state", "w_sum", "n_turns")))
-    g = rolled.groupBy(*keys).agg(arr.alias("_arr"))
+    g = rolled.groupBy("time_bucket").agg(arr.alias("_arr"))
     total = F.aggregate(
         F.col("_arr"), F.lit(0.0), lambda a, s: a + s["w_sum"]
     )
@@ -309,7 +192,8 @@ def derive_distribution(
         .withColumn("modal_count", modal["w"])
         .withColumn("effective_states", F.exp(F.col("entropy")))
     )
-    out_cols = keys + [
+    out_cols = [
+        "time_bucket",
         "n_valid",
         "entropy",
         "effective_states",
@@ -319,43 +203,23 @@ def derive_distribution(
     return g.select(*out_cols)
 
 
-def derive_transition_rates(
-    transitions: DataFrame, per_conv_bucket: bool = False
-) -> DataFrame:
-    keys = (
-        ["conv_bucket", "time_bucket"] if per_conv_bucket else ["time_bucket"]
-    )
-    rolled = transitions
-    if not per_conv_bucket:
-        rolled = transitions.groupBy(
-            "time_bucket", "from_state", "to_state"
-        ).agg(F.sum("t_count").alias("t_count"), F.sum("w_count").alias("w_count"))
-    w = Window.partitionBy(*keys, "from_state")
+def derive_transition_rates(transitions: DataFrame) -> DataFrame:
+    w = Window.partitionBy("time_bucket", "from_state")
+    rolled = merge(transitions, "transitions", F.col("time_bucket"), [])
     return rolled.withColumn(
         "transition_rate", F.col("w_count") / F.sum("w_count").over(w)
     )
 
 
-def derive_spell_stats(spells: DataFrame, per_conv_bucket: bool = False) -> DataFrame:
+def derive_spell_stats(spells: DataFrame) -> DataFrame:
     """mean / var_pop of spell durations from algebraic sums:
     var = E[d²] − E[d]² over exact integer sums → deterministic floats."""
-    keys = (
-        ["conv_bucket", "time_bucket"] if per_conv_bucket else ["time_bucket"]
-    )
-    rolled = spells
-    if not per_conv_bucket:
-        rolled = spells.groupBy("time_bucket", "state").agg(
-            F.sum("n_spells").alias("n_spells"),
-            F.sum("dur_sum").alias("dur_sum"),
-            F.sum("dur_sq_sum").alias("dur_sq_sum"),
-            F.min("dur_min").alias("dur_min"),
-            F.max("dur_max").alias("dur_max"),
-        )
     n = F.col("n_spells").cast("double")
     mean = F.col("dur_sum") / n
     var = F.col("dur_sq_sum") / n - mean * mean
+    rolled = merge(spells, "spells", F.col("time_bucket"), [])
     return rolled.select(
-        *keys,
+        "time_bucket",
         "state",
         "n_spells",
         "dur_min",

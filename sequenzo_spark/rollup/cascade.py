@@ -37,21 +37,20 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sequenzo_spark.checkpoint.manifest import Manifest
+from sequenzo_spark.checkpoint.manifest import Manifest, partition_metrics
 from sequenzo_spark.ingest import encode_states, refined_alphabet_col
 from sequenzo_spark.rollup.aggregates import (
-    merge_spells,
-    merge_state_counts,
-    merge_transitions,
+    TABLES,
+    merge_tier,
     rollup_1m_fused,
     with_conv_bucket,
 )
 
-TIER_TABLES = ("state_counts", "transitions", "spells")
 PART_COLS = ["conv_bucket", "part_date"]
 
 
@@ -81,6 +80,11 @@ def _chunk(xs: list, size: int | None):
         yield xs[i : i + size]
 
 
+def _dated(df: DataFrame) -> DataFrame:
+    """A tier frame plus its part_date write key."""
+    return df.withColumn("part_date", F.to_date("time_bucket").cast("string"))
+
+
 def _list_part_dates(path: str) -> list[str]:
     """Distinct part_date partition values from the DIRECTORY LISTING —
     zero Spark jobs, no data scan (Iceberg metadata tables give the same at
@@ -99,7 +103,6 @@ def _write_and_measure(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    checksums: bool = False,
     read_filter=None,
 ) -> list[tuple[str, int, int | None]]:
     """Checksum-less write path (the bulk passthrough encode stage): write
@@ -115,7 +118,6 @@ def _write_and_measure(
     Repartitions by the write layout first: one task per (cb, date)
     partition dir → one file each, instead of every task spraying a small
     file into every dir (small-files write amplification)."""
-    assert not checksums, "checksummed writes are fused in run_stage"
     df.repartition(*[F.col(c) for c in PART_COLS]).write.mode(
         "overwrite"
     ).partitionBy(*PART_COLS).parquet(path)
@@ -259,7 +261,6 @@ def run_cascade(
                         spark,
                         tdf,
                         _path_of(tname),
-                        checksums=False,
                         read_filter=(
                             read_filter_of(batch) if read_filter_of else None
                         ),
@@ -292,19 +293,12 @@ def run_cascade(
                             )
                         )
                     metric_frames = [
-                        tdf.withColumn("_h", F.xxhash64(*tdf.columns))
-                        .groupBy(*PART_COLS)
-                        .agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.expr("bit_xor(_h)").alias("cs"),
+                        partition_metrics(tdf, *PART_COLS).withColumn(
+                            "_t", F.lit(tname)
                         )
-                        .withColumn("_t", F.lit(tname))
                         for tname, tdf in reparted.items()
                     ]
-                    m = metric_frames[0]
-                    for f in metric_frames[1:]:
-                        m = m.unionByName(f)
-                    agg = m.collect()
+                    agg = reduce(DataFrame.unionByName, metric_frames).collect()
                 finally:
                     for tdf in reparted.values():
                         tdf.unpersist()
@@ -405,12 +399,7 @@ def run_cascade(
 
     def build_1m(sub: DataFrame, _batch):
         enriched, tables = rollup_1m_fused(sub)
-        out = {
-            name: df.withColumn(
-                "part_date", F.to_date("time_bucket").cast("string")
-            )
-            for name, df in tables.items()
-        }
+        out = {name: _dated(df) for name, df in tables.items()}
         return out, lambda: enriched.unpersist()
 
     run_stage(
@@ -433,18 +422,13 @@ def run_cascade(
     # the 1h files back. On-disk layout is unchanged (path-style table
     # names), so readers (gorilla, queries, tests) see the same tree; both
     # tiers' partitions commit atomically per batch in the manifest.
-    mergers = {
-        "state_counts": merge_state_counts,
-        "transitions": merge_transitions,
-        "spells": merge_spells,
-    }
     dates = _list_part_dates(f"{out_root}/rollup_1m/state_counts")
 
     def build_1h1d(_sub, batch):
         days = [str(b) for b in batch]
         h_tables = {}
         low_sc = None
-        for tname, fn in mergers.items():
+        for tname in TABLES:
             low = spark.read.parquet(f"{out_root}/rollup_1m/{tname}").filter(
                 F.col("part_date").cast("string").isin(days)
             )
@@ -454,15 +438,10 @@ def run_cascade(
                 # parquet once instead of twice
                 low = low.persist()
                 low_sc = low
-            h = fn(low, "1h").withColumn(
-                "part_date", F.to_date("time_bucket").cast("string")
-            )
-            h_tables[tname] = h.persist()
+            h_tables[tname] = _dated(merge_tier(low, tname, "1h")).persist()
         out = {f"rollup_1h/{t}": df for t, df in h_tables.items()}
-        for tname, fn in mergers.items():
-            out[f"rollup_1d/{tname}"] = fn(h_tables[tname], "1d").withColumn(
-                "part_date", F.to_date("time_bucket").cast("string")
-            )
+        for tname, h in h_tables.items():
+            out[f"rollup_1d/{tname}"] = _dated(merge_tier(h, tname, "1d"))
         if compress:
             # ---- fused gorilla chunking (round-5) ------------------------
             # Through round 4 this was a separate stage that RE-READ all

@@ -5,8 +5,9 @@ forward path: a streaming source of transcript turns feeds the SAME 1m
 continuous aggregate (per-bucket per-state counts) through tumbling
 ``window()`` aggregation with a watermark bounding turn lateness. The sink
 is an append-mode parquet tier directory compatible with the batch cascade's
-1m table (the 1h/1d merges are source-agnostic — algebraic re-merges don't
-care whether 1m rows came from batch or stream).
+1m table, and ``merge_tier`` takes it to 1h/1d as it does the batch 1m
+files: streamed 1m rows merged to 1h equal the cascade's 1h tier bit for bit
+(tests/test_streaming.py::test_streamed_1m_merges_to_cascade_1h_tier).
 
 Tested with the file source + ``Trigger.AvailableNow`` (deterministic, no
 wall-clock dependence); in production the source is Kafka/Iceberg CDC and
@@ -18,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sequenzo_spark.rollup.aggregates import merge, units, with_conv_bucket
+
 
 def streaming_state_counts_1m(
     turns_stream: DataFrame,
@@ -28,30 +31,23 @@ def streaming_state_counts_1m(
 ) -> DataFrame:
     """Streaming per-(conv_bucket, 1m window, state) counts.
 
-    Watermark = max tolerated turn lateness: a 1m bucket finalizes once the
-    event-time high-water mark passes bucket_end + watermark, at which point
-    the append-mode sink emits exactly one immutable row per key — the same
-    algebraic shape the batch cascade writes."""
-    w = F.window(F.col(ts_col), "1 minute")
-    return (
+    The batch 1m merge with a tumbling ``window()`` as its bucket, because
+    append mode needs a watermarked window key. Watermark = max tolerated
+    turn lateness: a 1m bucket finalizes once the event-time high-water mark
+    passes bucket_end + watermark, at which point the append-mode sink emits
+    exactly one immutable row per key — the same algebraic shape the batch
+    cascade writes."""
+    turns = with_conv_bucket(
         turns_stream.withWatermark(ts_col, watermark)
         .filter(F.col(state_col).isNotNull())
-        .groupBy(
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(salt_buckets))
-            .cast("int")
-            .alias("conv_bucket"),
-            w,
-            F.col(state_col).alias("state"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_turns"), F.sum(F.lit(1.0)).alias("w_sum"))
-        .select(
-            "conv_bucket",
-            F.col("window.start").alias("time_bucket"),
-            "state",
-            "n_turns",
-            "w_sum",
-        )
+        .withColumn("state", F.col(state_col)),
+        buckets=salt_buckets,
     )
+    minute = F.window(F.col(ts_col), "1 minute")
+    counts = merge(
+        units(turns, "state_counts"), "state_counts", minute, ["conv_bucket"]
+    )
+    return counts.withColumn("time_bucket", F.col("time_bucket.start"))
 
 
 def streaming_spell_tracker(
@@ -74,12 +70,13 @@ def streaming_spell_tracker(
     the still-open final spell is emitted when the conversation times out
     (event-time timeout = conversation considered finished).
 
-    Arrow-batched per group — no per-row Python at the Spark level; the
-    per-group loop touches only that micro-batch's turns. Emitted columns
+    Arrow-batched per group, and no per-row Python: the run boundaries of a
+    micro-batch's turns come from one numpy change mask. Emitted columns
     match the batch spell table: seq_id, spell_id, state, duration,
     pos_start, pos_end (+ closed flag: false = timeout flush of an open
     spell).
     """
+    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -96,54 +93,66 @@ def streaming_spell_tracker(
         "duration int"
     )
 
+    columns = [
+        "seq_id", "spell_id", "state", "duration", "pos_start", "pos_end",
+        "closed",
+    ]
+
     def track(key, pdfs, state: GroupState):
         (seq_id,) = key
-        rows = []
         if state.hasTimedOut:
+            rows = []
             if state.exists:
                 ls, sid, p0, p1, dur = state.get
                 rows.append((seq_id, sid, ls, dur, p0, p1, False))
                 state.remove()
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "seq_id", "spell_id", "state", "duration",
-                    "pos_start", "pos_end", "closed",
-                ],
-            )
+            yield pd.DataFrame(rows, columns=columns)
             return
         turns = pd.concat(list(pdfs)).sort_values(order_col)
         if state.exists:
             ls, sid, p0, p1, dur = state.get
         else:
             ls, sid, p0, p1, dur = None, 0, None, None, 0
-        for _, r in turns.iterrows():
-            s, pos = r[state_col], int(r[order_col])
-            if s is None or (isinstance(s, float) and pd.isna(s)):
-                s = ls  # LOCF inside the tracker (seqdur.pyx:19-20 semantics)
-                if s is None:
-                    continue
-            if ls is None:
-                ls, sid, p0, p1, dur = s, 1, pos, pos, 1
-            elif s == ls:
-                p1, dur = pos, dur + 1
-            else:
-                rows.append((seq_id, sid, ls, dur, p0, p1, True))
-                ls, sid, p0, p1, dur = s, sid + 1, pos, pos, 1
-        # Skip state creation until a non-null state is seen: a micro-batch of
-        # only null-state turns would otherwise store last_state=None and the
-        # timeout would flush a phantom NULL spell (duration 0).
+        # LOCF seeded by the carried state (seqdur.pyx:19-20 semantics); a
+        # conversation's leading null turns belong to no spell.
+        s = turns[state_col].ffill()
         if ls is not None:
-            state.update((ls, sid, p0, p1, dur))
+            s = s.fillna(ls)
+        keep = s.notna().to_numpy()
+        v = s.to_numpy(dtype=object)[keep]
+        pos = turns[order_col].to_numpy()[keep]
+        prev = np.concatenate([np.array([ls], dtype=object), v[:-1]])
+        starts = np.flatnonzero(v != prev)
+        ends = np.append(starts, len(v))[1:]
+        head = starts[0] if len(starts) else len(v)
+        spells = {
+            "spell_id": sid + 1 + np.arange(len(starts)),
+            "state": v[starts],
+            "duration": ends - starts,
+            "pos_start": pos[starts],
+            "pos_end": pos[ends - 1],
+        }
+        if ls is not None:
+            # the carried spell runs on through the rows before the first
+            # change
+            carried = (sid, ls, dur + head, p0, pos[head - 1] if head else p1)
+            spells = {
+                c: np.concatenate([[x], a])
+                for (c, a), x in zip(spells.items(), carried)
+            }
+        # The last spell stays open in the state. Skip state creation until a
+        # non-null state is seen: a micro-batch of only null-state turns
+        # would otherwise store last_state=None and the timeout would flush
+        # a phantom NULL spell (duration 0).
+        if len(spells["state"]):
+            sid, ls, dur, p0, p1 = (a[-1] for a in spells.values())
+            state.update((ls, int(sid), int(p0), int(p1), int(dur)))
             state.setTimeoutTimestamp(
                 state.getCurrentWatermarkMs() + timeout_minutes * 60_000
             )
+        closed = {c: a[:-1] for c, a in spells.items()}
         yield pd.DataFrame(
-            rows,
-            columns=[
-                "seq_id", "spell_id", "state", "duration",
-                "pos_start", "pos_end", "closed",
-            ],
+            {"seq_id": seq_id, **closed, "closed": True}, columns=columns
         )
 
     return (
