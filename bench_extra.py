@@ -34,24 +34,13 @@ SUFFIX = os.environ.get("PLAN_SUFFIX", "before")
 N_RUNS = int(os.environ.get("N_RUNS", "2"))
 
 
-def _release_all():
-    from sequenzo_spark.operators.prefix_tree import release_prefix_caches
-    from sequenzo_spark.operators.subsequences import release_stats_caches
-    from sequenzo_spark.operators.suffix_tree import release_suffix_caches
-    from sequenzo_spark.pipeline.dedup import release_sig_caches
-
-    release_sig_caches()
-    release_stats_caches()
-    release_prefix_caches()
-    release_suffix_caches()
-
-
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:]
 
     from sequenzo_spark import get_spark
     from sequenzo_spark.driver_queries import QUERIES
+    from sequenzo_spark.session import release_caches
 
     spark = get_spark("bench-extra", cores=CPUS, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -68,7 +57,7 @@ def main() -> None:
             )
             with open(f"{REPO}/plans/{TAG}/{name}_{SUFFIX}.txt", "w") as f:
                 f.write(plan)
-            _release_all()
+            release_caches()
         if mode in ("time", "both"):
             per = []
             for i in range(N_RUNS):
@@ -76,7 +65,7 @@ def main() -> None:
                 t0 = time.time()
                 fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 per.append(round(time.time() - t0, 3))
-                _release_all()
+                release_caches()
             spark.sparkContext.setJobDescription(None)
             times[name] = min(per)
             print(f"{name}: {per} -> {min(per)}", file=sys.stderr)

@@ -16,6 +16,7 @@ at different parallelism produce comparable lineage.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,10 +43,11 @@ class Manifest:
         self.path = path
 
     def _read(self) -> DataFrame | None:
-        try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
-        except Exception:
+        """The manifest rows, or None before the first commit creates the
+        directory. Any other read error propagates."""
+        if not os.path.isdir(self.path):
             return None
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def completed(self, job_id: str, stage: str) -> set[str]:
         """Partition keys already committed for (job, stage). A partition
@@ -71,7 +73,6 @@ class Manifest:
         of pure scheduling latency to EVERY stage of the cascade."""
         if not rows:
             return
-        import os
         import uuid
         from datetime import datetime, timezone
 

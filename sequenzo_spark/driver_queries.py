@@ -16,6 +16,8 @@ user_id→conv_id, event_type→role/state, ts→ts, row_number→turn_idx.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,6 +38,7 @@ from sequenzo_spark.operators.indicators import (
 )
 from sequenzo_spark.operators.spells import spell_table
 from sequenzo_spark.operators.transitions import transition_counts, transition_rates
+from sequenzo_spark.session import release_caches
 
 R = 9  # rounding for derived floats on both sides
 
@@ -243,11 +246,9 @@ def q_value_rollup_1h_from_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup over documents: hash-groupBy on md5(text); keeper =
     min(doc_id); one row per distinct text."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
-        F.count(F.lit(1)).alias("dup_count"),
-        F.min("doc_id").alias("keeper_doc_id"),
-    )
+    from sequenzo_spark.pipeline.dedup import exact_dedup
+
+    return exact_dedup(_t(spark, sf_dir, "documents"))
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,9 +651,8 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probabilistic MinHash path into an oracle-checkable statement: the
     DuckDB side computes exact all-candidate Jaccard, so any LSH recall miss
     at this SF surfaces as a row-count/hash mismatch."""
-    from sequenzo_spark.pipeline.dedup import minhash_verified_pairs, release_sig_caches
+    from sequenzo_spark.pipeline.dedup import minhash_verified_pairs
 
-    release_sig_caches()  # drop any signature table a previous query persisted
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_verified_pairs(docs, threshold=0.8)
     return pairs.select("d1", "d2", F.round("jaccard", R).alias("jaccard"))
@@ -683,9 +683,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64)+LSH(16 bands) near-dup candidates — probabilistic, so
     rows-only driver check; recall/precision asserted in unit tests."""
-    from sequenzo_spark.pipeline.dedup import minhash_lsh_candidates, release_sig_caches
+    from sequenzo_spark.pipeline.dedup import minhash_lsh_candidates
 
-    release_sig_caches()  # drop any signature table a previous query persisted
     docs = _t(spark, sf_dir, "documents")
     return minhash_lsh_candidates(docs).filter(F.col("jaccard_est") >= 0.5)
 
@@ -751,9 +750,6 @@ def q_frequent_event_subseq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequenzo_spark.functions.seqops import to_event_rows
     from sequenzo_spark.operators.subsequences import frequent_subsequences
 
-    from sequenzo_spark.operators.subsequences import release_stats_caches
-
-    release_stats_caches()  # drop any stats table a previous query persisted
     ev = to_event_rows(_event_turns(spark, sf_dir))
     out = frequent_subsequences(
         ev, max_k=3, min_support_ratio=0.05, persist_stats=True
@@ -772,9 +768,6 @@ def q_subseq_occurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_subsequence_occurrences,
     )
 
-    from sequenzo_spark.operators.subsequences import release_stats_caches
-
-    release_stats_caches()
     ev = to_event_rows(_event_turns(spark, sf_dir))
     return count_subsequence_occurrences(
         ev, SUBSEQ_PATTERNS, method="count", persist_stats=True
@@ -786,12 +779,8 @@ def q_subseq_group_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seq_id parity) — compare_groups/seqecmpgroup semantics (core.py:785)
     with scipy's Yates-at-dof-1 convention."""
     from sequenzo_spark.functions.seqops import to_event_rows
-    from sequenzo_spark.operators.subsequences import (
-        compare_group_subsequences,
-        release_stats_caches,
-    )
+    from sequenzo_spark.operators.subsequences import compare_group_subsequences
 
-    release_stats_caches()
     turns = _event_turns(spark, sf_dir)
     ev = to_event_rows(turns)
     groups = turns.select("seq_id").distinct().select(
@@ -844,12 +833,8 @@ def q_prefix_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IndividualDivergence.compute_diverged / compute_standardized_rarity_score,
     prefix_tree/individual_level_indicators.py:99-280, :647) — window=2
     consecutive above-threshold years from depth 2 on."""
-    from sequenzo_spark.operators.prefix_tree import (
-        prefix_divergence,
-        release_prefix_caches,
-    )
+    from sequenzo_spark.operators.prefix_tree import prefix_divergence
 
-    release_prefix_caches()  # drop any rarity frame a previous query persisted
     turns = _event_turns(spark, sf_dir)
     out = prefix_divergence(
         turns, z_threshold=1.0, min_t=2, window=2, persist_stats=True
@@ -916,12 +901,8 @@ def q_suffix_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     .compute_converged / compute_standardized_rarity_score,
     suffix_tree/individual_level_indicators.py:107-726) — window=2
     consecutive below-(−1.0)-z years from year 1 on."""
-    from sequenzo_spark.operators.suffix_tree import (
-        release_suffix_caches,
-        suffix_convergence,
-    )
+    from sequenzo_spark.operators.suffix_tree import suffix_convergence
 
-    release_suffix_caches()
     turns = _event_turns(spark, sf_dir)
     out = suffix_convergence(
         turns, z_threshold=1.0, min_t=1, window=2, persist_stats=True
@@ -940,12 +921,8 @@ def q_suffix_convergence_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the floor(0.2·n_valid) smallest aggregated std_scores are flagged;
     first_convergence_t = earliest year whose window-max z is ≤ the
     selection threshold (:449-487)."""
-    from sequenzo_spark.operators.suffix_tree import (
-        release_suffix_caches,
-        suffix_convergence,
-    )
+    from sequenzo_spark.operators.suffix_tree import suffix_convergence
 
-    release_suffix_caches()
     turns = _event_turns(spark, sf_dir)
     out = suffix_convergence(
         turns, min_t=1, window=1, method="top_proportion", proportion=0.2,
@@ -965,12 +942,8 @@ def q_prefix_divergence_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(0.2·n_valid) LARGEST aggregated std_scores are flagged
     (direction high); first_divergence_t = earliest year whose window-min
     z is ≥ the selection threshold."""
-    from sequenzo_spark.operators.prefix_tree import (
-        prefix_divergence,
-        release_prefix_caches,
-    )
+    from sequenzo_spark.operators.prefix_tree import prefix_divergence
 
-    release_prefix_caches()
     turns = _event_turns(spark, sf_dir)
     out = prefix_divergence(
         turns, min_t=2, window=1, method="top_proportion", proportion=0.2,
@@ -1114,72 +1087,91 @@ def q_sequence_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _after_release(q):
+    """``q`` run after :func:`release_caches`: each query plans against an
+    empty cache registry, so no frame an earlier query persisted stands in
+    for a sub-plan of this one. The release comes before any table read, so
+    queries started together in threads release before any of them
+    persists; a frame released under a running plan is recomputed, never
+    wrong."""
+
+    @functools.wraps(q)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_caches()
+        return q(spark, sf_dir)
+
+    return run
+
+
 QUERIES = {
-    "state_dist_hourly": q_state_dist_hourly,
-    "xsect_entropy_hourly": q_xsect_entropy_hourly,
-    "modal_state_daily": q_modal_state_daily,
-    "transition_counts": q_transition_counts,
-    "transition_rates": q_transition_rates,
-    "transition_counts_daily": q_transition_counts_daily,
-    "spell_stats": q_spell_stats,
-    "seq_indicators": q_seq_indicators,
-    "seqconc": q_seqconc,
-    "gapfill_locf_minutely": q_gapfill_locf_minutely,
-    "uniqueness_rate": q_uniqueness_rate,
-    "value_rollup_1h_from_1m": q_value_rollup_1h_from_1m,
-    "dedup_exact": q_dedup_exact,
-    "token_stats": q_token_stats,
-    "turbulence": q_turbulence,
-    "mean_time_in_states": q_mean_time_in_states,
-    "entropy_diff": q_entropy_diff,
-    "spell_dur_var2": q_spell_dur_var2,
-    "turbulence_norm": q_turbulence_norm,
-    "integration_index": q_integration_index,
-    "seq_length_summary": q_seq_length_summary,
-    "jsd_hourly": q_jsd_hourly,
-    "nation_revenue": q_nation_revenue,
-    "person_period": q_person_period,
-    "find_seq_occurrences": q_find_seq_occurrences,
-    "xtabs_state_hour": q_xtabs_state_hour,
-    "transition_pwight": q_transition_pwight,
-    "transition_counts_weighted": q_transition_counts_weighted,
-    "gapfill_linear_minutely": q_gapfill_linear_minutely,
-    "state_dist_hourly_weighted": q_state_dist_hourly_weighted,
-    "mean_time_weighted": q_mean_time_weighted,
-    "modal_sequence_occurrences": q_modal_sequence_occurrences,
-    "event_counts_daily": q_event_counts_daily,
-    "top_sequences": q_top_sequences,
-    "domain_combine_counts": q_domain_combine_counts,
-    "sparse_pattern_counts": q_sparse_pattern_counts,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "quality_metrics": q_quality_metrics,
-    "doc_fingerprint": q_doc_fingerprint,
-    "cosine_topk": q_cosine_topk,
-    "minhash_lsh_candidates": q_minhash_lsh_candidates,
-    "minhash_verified_pairs": q_minhash_verified_pairs,
-    "simhash": q_simhash,
-    "lsh_cosine_topk": q_lsh_cosine_topk,
-    "ann_batch_topk": q_ann_batch_topk,
-    "frequent_event_subseq": q_frequent_event_subseq,
-    "subseq_occurrence_counts": q_subseq_occurrence_counts,
-    "subseq_group_chisq": q_subseq_group_chisq,
-    "prefix_tree_stats": q_prefix_tree_stats,
-    "prefix_rarity": q_prefix_rarity,
-    "prefix_divergence": q_prefix_divergence,
-    "spell_prefix_stats": q_spell_prefix_stats,
-    "suffix_tree_stats": q_suffix_tree_stats,
-    "suffix_rarity": q_suffix_rarity,
-    "suffix_convergence": q_suffix_convergence,
-    "suffix_convergence_topp": q_suffix_convergence_topp,
-    "prefix_divergence_topp": q_prefix_divergence_topp,
-    "spell_suffix_stats": q_spell_suffix_stats,
-    "emlt_transrate": q_emlt_transrate,
-    "spell_survival": q_spell_survival,
-    "badness_index": q_badness_index,
-    "degradation_index": q_degradation_index,
-    "pos_neg_share": q_pos_neg_share,
-    "duration_features": q_duration_features,
-    "sequence_history": q_sequence_history,
+    name: _after_release(q)
+    for name, q in {
+        "state_dist_hourly": q_state_dist_hourly,
+        "xsect_entropy_hourly": q_xsect_entropy_hourly,
+        "modal_state_daily": q_modal_state_daily,
+        "transition_counts": q_transition_counts,
+        "transition_rates": q_transition_rates,
+        "transition_counts_daily": q_transition_counts_daily,
+        "spell_stats": q_spell_stats,
+        "seq_indicators": q_seq_indicators,
+        "seqconc": q_seqconc,
+        "gapfill_locf_minutely": q_gapfill_locf_minutely,
+        "uniqueness_rate": q_uniqueness_rate,
+        "value_rollup_1h_from_1m": q_value_rollup_1h_from_1m,
+        "dedup_exact": q_dedup_exact,
+        "token_stats": q_token_stats,
+        "turbulence": q_turbulence,
+        "mean_time_in_states": q_mean_time_in_states,
+        "entropy_diff": q_entropy_diff,
+        "spell_dur_var2": q_spell_dur_var2,
+        "turbulence_norm": q_turbulence_norm,
+        "integration_index": q_integration_index,
+        "seq_length_summary": q_seq_length_summary,
+        "jsd_hourly": q_jsd_hourly,
+        "nation_revenue": q_nation_revenue,
+        "person_period": q_person_period,
+        "find_seq_occurrences": q_find_seq_occurrences,
+        "xtabs_state_hour": q_xtabs_state_hour,
+        "transition_pwight": q_transition_pwight,
+        "transition_counts_weighted": q_transition_counts_weighted,
+        "gapfill_linear_minutely": q_gapfill_linear_minutely,
+        "state_dist_hourly_weighted": q_state_dist_hourly_weighted,
+        "mean_time_weighted": q_mean_time_weighted,
+        "modal_sequence_occurrences": q_modal_sequence_occurrences,
+        "event_counts_daily": q_event_counts_daily,
+        "top_sequences": q_top_sequences,
+        "domain_combine_counts": q_domain_combine_counts,
+        "sparse_pattern_counts": q_sparse_pattern_counts,
+        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
+        "quality_metrics": q_quality_metrics,
+        "doc_fingerprint": q_doc_fingerprint,
+        "cosine_topk": q_cosine_topk,
+        "minhash_lsh_candidates": q_minhash_lsh_candidates,
+        "minhash_verified_pairs": q_minhash_verified_pairs,
+        "simhash": q_simhash,
+        "lsh_cosine_topk": q_lsh_cosine_topk,
+        "ann_batch_topk": q_ann_batch_topk,
+        "frequent_event_subseq": q_frequent_event_subseq,
+        "subseq_occurrence_counts": q_subseq_occurrence_counts,
+        "subseq_group_chisq": q_subseq_group_chisq,
+        "prefix_tree_stats": q_prefix_tree_stats,
+        "prefix_rarity": q_prefix_rarity,
+        "prefix_divergence": q_prefix_divergence,
+        "spell_prefix_stats": q_spell_prefix_stats,
+        "suffix_tree_stats": q_suffix_tree_stats,
+        "suffix_rarity": q_suffix_rarity,
+        "suffix_convergence": q_suffix_convergence,
+        "suffix_convergence_topp": q_suffix_convergence_topp,
+        "prefix_divergence_topp": q_prefix_divergence_topp,
+        "spell_suffix_stats": q_spell_suffix_stats,
+        "emlt_transrate": q_emlt_transrate,
+        "spell_survival": q_spell_survival,
+        "badness_index": q_badness_index,
+        "degradation_index": q_degradation_index,
+        "pos_neg_share": q_pos_neg_share,
+        "duration_features": q_duration_features,
+        "sequence_history": q_sequence_history,
+    }.items()
 }
 
 # ------------------------------------------------------------- oracle SQL

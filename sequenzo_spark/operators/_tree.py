@@ -29,35 +29,11 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from sequenzo_spark.session import persist
+
 SEP = "\x1f"  # unit separator: cannot appear in state labels (validated at ingest)
 
 _HASH_SEED = -6048811049363430000  # arbitrary non-state chain seed
-
-# Persisted internal frames currently alive (the dedup-module registry
-# pattern): the rarity frame of ``persist_stats=True`` and the scored frame
-# of the ungrouped selections register here; release_caches() lets query
-# wrappers / bench drop storage between plans.
-_LIVE_TREE_CACHES: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    """Unpersist every frame the prefix/suffix-tree operators persisted
-    since the last release. Plans that still reference one simply
-    recompute."""
-    n = 0
-    while _LIVE_TREE_CACHES:
-        try:
-            _LIVE_TREE_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def _persist(frame: DataFrame) -> DataFrame:
-    frame = frame.persist()
-    _LIVE_TREE_CACHES.append(frame)
-    return frame
 
 
 def _hashed_key_rows(
@@ -354,7 +330,7 @@ def divergence(
     if persist_stats:
         # rar feeds both the per-level moment aggregate and the z re-join;
         # without the cache the window+join chain runs twice
-        rar = _persist(rar)
+        rar = persist(rar)
     # scan in year order: depth for prefixes; for suffixes year
     # L − t + 1, i.e. descending suffix length
     order = -F.col("t") if from_end else F.col("t")
@@ -516,7 +492,7 @@ def select_by_score(
         # selected score). Every strictly-more-extreme score is among the
         # top k, so the tie budget k − |strict| is the number of times s*
         # appears in the top k: one job yields both s* and the budget.
-        cached = _persist(scored)
+        cached = persist(scored)
         n_valid = cached.where(sc.isNotNull()).count()
         k = min(max(math.floor(p * n_valid), int(min_count)), n_valid)
         if k <= 0:
@@ -566,7 +542,7 @@ def select_by_score(
         # exact percentile as an AGGREGATE (identical value to a
         # whole-frame window percentile: same function, same multiset),
         # broadcast back — no single-partition window
-        cached = _persist(scored)
+        cached = persist(scored)
         thr_df = cached.agg(
             F.expr(f"percentile({score_col}, {q!r})").alias("_thr")
         )

@@ -40,8 +40,8 @@ from sequenzo_spark.operators import _tree
 from sequenzo_spark.operators._tree import (  # noqa: F401  (public names)
     SEP,
     _prefix_rows,
-    release_caches as release_prefix_caches,
 )
+from sequenzo_spark.session import release_caches as release_prefix_caches  # noqa: F401
 
 
 def prefix_tree_stats(

@@ -28,33 +28,18 @@ and candidate patterns EMERGE from the joins (a pattern absent everywhere
 never materializes), so no driver-side alphabet enumeration is needed.
 All shuffles are keyed by seq_id; no UDFs. The per-event aggregate
 feeds 1-3 joins per call; pass persist_stats=True to cache it for the
-call's duration at production scale (plans stay pure by default so
-short-lived driver queries leak no storage; the caller unpersists).
+call's duration at production scale (plans stay pure by default; the
+cached table is released with ``session.release_caches``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Persisted per-event-stats tables currently alive (the dedup-module
-# registry pattern): persist_stats=True registers here so callers without
-# a handle on the internal frame — driver-query wrappers, bench — can
-# release storage between plans via release_stats_caches().
-_LIVE_STATS_CACHES: list[DataFrame] = []
-
-
-def release_stats_caches() -> int:
-    """Unpersist every per-event-stats table persisted via
-    ``persist_stats=True`` since the last release. Returns the count.
-    Plans that still reference a released table simply recompute it."""
-    n = 0
-    while _LIVE_STATS_CACHES:
-        try:
-            _LIVE_STATS_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+from sequenzo_spark.session import (  # noqa: F401  (public name)
+    persist,
+    release_caches as release_stats_caches,
+)
 
 
 def _per_event_stats(
@@ -121,8 +106,7 @@ def frequent_subsequences(
         events, seq_col, order_col, event_col, weight_col, positions=(max_k >= 3)
     )
     if persist_stats:
-        pe = pe.persist()
-        _LIVE_STATS_CACHES.append(pe)
+        pe = persist(pe)
     # the self-joins below co-key on seq_id with Kᵏ-row fan-out; sort-merge
     # measures ~20% faster than the session default shuffled-hash here (the
     # build-side hashmap over the full per-event table costs more than the
@@ -360,8 +344,7 @@ def count_subsequence_occurrences(
         events, seq_col, order_col, event_col, positions=True
     )
     if persist_stats:
-        pe = pe.persist()
-        _LIVE_STATS_CACHES.append(pe)
+        pe = persist(pe)
     seqs = pe.select("seq_id").distinct()
 
     outs = []

@@ -67,10 +67,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 from sequenzo_spark.operators import _tree
 from sequenzo_spark.operators._tree import (  # noqa: F401  (public names)
     SEP,
-    release_caches as release_suffix_caches,
     select_by_score,
     starts_of,
 )
+from sequenzo_spark.session import release_caches as release_suffix_caches  # noqa: F401
 
 
 def suffix_tree_stats(

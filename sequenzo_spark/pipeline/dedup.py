@@ -21,29 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Persisted MinHash signature tables currently alive. A caller-side
-# transformation on the result DataFrame silently drops a monkey-patched
-# attribute (the round-3 advisor finding), so the authoritative release
-# mechanism is this module-level registry + :func:`release_sig_caches`;
-# driver-query wrappers call it before building a new plan, bounding the
-# session to one live signature cache at a time. The `_sig_cache` attribute
-# on results is kept as a convenience handle only.
-_LIVE_SIG_CACHES: list[DataFrame] = []
-
-
-def release_sig_caches() -> int:
-    """Unpersist every signature table persisted by
-    :func:`minhash_lsh_candidates` since the last release. Returns the number
-    released. Safe to call at any time: plans that still reference a released
-    table simply recompute it."""
-    n = 0
-    while _LIVE_SIG_CACHES:
-        try:
-            _LIVE_SIG_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+from sequenzo_spark.session import (  # noqa: F401  (public name)
+    persist,
+    release_caches as release_sig_caches,
+)
 
 
 def tokens_col(text_col: str = "text") -> F.Column:
@@ -292,13 +273,12 @@ def minhash_lsh_candidates(
     (band, bucket_hash), never O(n²).
 
     The internal signature table is persisted (it feeds the band join and
-    both re-attach joins); the handle is exposed on the result as
-    ``result._sig_cache`` so long-lived sessions can release the storage
-    after materializing the pairs: ``result._sig_cache.unpersist()``.
+    both re-attach joins) through ``session.persist``; release the storage
+    after materializing the pairs with ``session.release_caches()``.
 
     Timing note (round-5 probe): computing the 64-hash signatures is
     itself ~70-80% of this query's wall at sf0.1 (~4 s of ~5 s warm).
-    Round 3's 2.0 s "warm" number predates the cache registries — its
+    Round 3's 2.0 s "warm" number predates the cache registry — its
     second run silently reused the FIRST run's still-persisted signature
     table (the leak the round-3 advisor flagged); once releases run
     between plans, the honest warm time includes signature computation.
@@ -309,8 +289,7 @@ def minhash_lsh_candidates(
     # Persist signatures: referenced three times below (band join on ids,
     # then one re-attach per pair side). At cluster scale this is the
     # materialized signature table.
-    sig = minhash_signatures(docs, n_hashes, n, text_col, id_col).persist()
-    _LIVE_SIG_CACHES.append(sig)
+    sig = persist(minhash_signatures(docs, n_hashes, n, text_col, id_col))
     # Band join carries ONLY (doc_id, band, bucket) through the shuffle —
     # never the 64-long signatures (signature payload on both sides of a
     # skewed self-join was the round-1 perf finding).
@@ -367,9 +346,7 @@ def minhash_lsh_candidates(
         ).cast("double")
         / F.lit(float(n_hashes))
     )
-    result = cand.select("d1", "d2", est.alias("jaccard_est"))
-    result._sig_cache = sig  # release handle — see docstring
-    return result
+    return cand.select("d1", "d2", est.alias("jaccard_est"))
 
 
 def _simhash_count_rows(
@@ -505,8 +482,9 @@ def minhash_verified_pairs(
     trades candidate-join fan-out, never the answer. This makes the
     probabilistic path ORACLE-CHECKABLE against the exact all-candidate SQL
     (the driver gate records any deterministic miss as a hash mismatch)."""
-    raw_cand = minhash_lsh_candidates(docs, n_hashes, bands, n, text_col, id_col)
-    cand = raw_cand.select("d1", "d2")
+    cand = minhash_lsh_candidates(
+        docs, n_hashes, bands, n, text_col, id_col
+    ).select("d1", "d2")
     sh = _shingle_rows(docs, text_col, id_col, n)
     j = cand.join(
         sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1")), "d1"
@@ -517,9 +495,6 @@ def minhash_verified_pairs(
     jac = inter.cast("double") / (
         F.size("sh1") + F.size("sh2") - inter
     ).cast("double")
-    result = j.select("d1", "d2", jac.alias("jaccard")).filter(
+    return j.select("d1", "d2", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    # propagate the signature-cache release handle (see minhash_lsh_candidates)
-    result._sig_cache = raw_cand._sig_cache
-    return result

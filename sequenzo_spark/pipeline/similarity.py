@@ -23,10 +23,12 @@ def _no_pushdown(cond: F.Column) -> F.Column:
     NONDETERMINISTIC term (monotonically_increasing_id() is ≥ 0 by
     construction, so the predicate's VALUE is unchanged, but predicates
     containing a nondeterministic subexpression are never pushed, and OR
-    terms are not split). Without this the 32 interpreted hyperplane dot
-    products of the LSH candidate filter sink into the single-partition
-    parquet scan and run on one core (guide §2 — the local fixture files
-    are one row group, i.e. unsplittable)."""
+    terms are not split). The guard holds on every deployment, whatever
+    the input's file layout: the 32 interpreted hyperplane dot products of
+    the LSH candidate filter always run after the repartition, spread over
+    all cores, never in the scan's tasks. Without it they sink into the
+    parquet scan, which on an unsplittable input (the local fixtures are
+    one row group) runs them on one core (guide §2)."""
     return (F.monotonically_increasing_id() < 0) | cond
 
 
@@ -46,10 +48,6 @@ def _norm(a) -> F.Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine_col(a, b) -> F.Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _py_norm(vec: list[float]) -> float:

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sequenzo_spark.session import persist
+
 BUCKET_EXPRS = {
     "1m": lambda c: F.date_trunc("minute", c),
     "1h": lambda c: F.date_trunc("hour", c),
@@ -102,15 +104,14 @@ def rollup_1m_fused(turns: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
     node → exactly one shuffle by conv_id for the whole raw→1m stage; the
     enriched frame is persisted and the three aggregations read the cache.
 
-    Returns (enriched_df_to_unpersist, {table: df}). NULL states are
-    dropped (rows absent = void, SURVEY.md §1.1); LOCF-style fill happens
-    upstream at encode if desired.
+    Returns (enriched, {table: df}); ``session.release_caches`` drops the
+    enriched cache. NULL states are dropped (rows absent = void, SURVEY.md
+    §1.1); LOCF-style fill happens upstream at encode if desired.
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     prev = F.lag("state").over(w)
-    enriched = (
-        turns.filter(F.col("state").isNotNull())
-        .select(
+    enriched = persist(
+        turns.filter(F.col("state").isNotNull()).select(
             "conv_bucket",
             F.col("conv_id").alias("_seq"),
             "state",
@@ -120,7 +121,6 @@ def rollup_1m_fused(turns: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
             F.row_number().over(w).alias("_rk"),
             F.count(F.lit(1)).over(Window.partitionBy("conv_id")).alias("_len"),
         )
-        .persist()
     )
     pairs = enriched.filter(F.col("next_state").isNotNull()).select(
         "conv_bucket",

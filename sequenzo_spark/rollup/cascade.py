@@ -36,6 +36,7 @@ the write. AQE handles residual skew within a batch.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -50,6 +51,7 @@ from sequenzo_spark.rollup.aggregates import (
     rollup_1m_fused,
     with_conv_bucket,
 )
+from sequenzo_spark.session import persist, release_caches
 
 PART_COLS = ["conv_bucket", "part_date"]
 
@@ -228,15 +230,11 @@ def run_cascade(
         res.partitions_done[stage] = 0
         res.rows_out[stage] = 0
         t_stage = time.time()
-        for batch in _chunk(remaining, batch_size):
-            if not batch:
-                continue
+
+        def run_batch(batch):
             t0 = time.time()
             sub = batch_filter(src, batch)
-            built = build(sub, batch)
-            outputs, cleanup = (
-                built if isinstance(built, tuple) else (built, None)
-            )
+            outputs = build(sub, batch)
             commit_rows: list[dict] = []
 
             def _path_of(tname):
@@ -251,8 +249,6 @@ def run_cascade(
                     if len(outputs) > 1
                     else f"{out_root}/{stage}"
                 )
-
-            from concurrent.futures import ThreadPoolExecutor
 
             if not checksums:
                 def write_one(item):
@@ -278,30 +274,26 @@ def run_cascade(
                 # stops throughput from scaling when the per-level data work
                 # shrinks (BENCH/BASELINE.md).
                 reparted = {
-                    t: tdf.repartition(*[F.col(c) for c in PART_COLS]).persist()
+                    t: persist(tdf.repartition(*[F.col(c) for c in PART_COLS]))
                     for t, tdf in outputs.items()
                 }
-                try:
-                    with ThreadPoolExecutor(max_workers=len(reparted)) as pool:
-                        list(
-                            pool.map(
-                                lambda item: item[1]
-                                .write.mode("overwrite")
-                                .partitionBy(*PART_COLS)
-                                .parquet(_path_of(item[0])),
-                                reparted.items(),
-                            )
+                with ThreadPoolExecutor(max_workers=len(reparted)) as pool:
+                    list(
+                        pool.map(
+                            lambda item: item[1]
+                            .write.mode("overwrite")
+                            .partitionBy(*PART_COLS)
+                            .parquet(_path_of(item[0])),
+                            reparted.items(),
                         )
-                    metric_frames = [
-                        partition_metrics(tdf, *PART_COLS).withColumn(
-                            "_t", F.lit(tname)
-                        )
-                        for tname, tdf in reparted.items()
-                    ]
-                    agg = reduce(DataFrame.unionByName, metric_frames).collect()
-                finally:
-                    for tdf in reparted.values():
-                        tdf.unpersist()
+                    )
+                metric_frames = [
+                    partition_metrics(tdf, *PART_COLS).withColumn(
+                        "_t", F.lit(tname)
+                    )
+                    for tname, tdf in reparted.items()
+                ]
+                agg = reduce(DataFrame.unionByName, metric_frames).collect()
                 results = {}
                 for r in agg:
                     results.setdefault(r["_t"], []).append(
@@ -323,8 +315,6 @@ def run_cascade(
                             wall_ms=wall,
                         )
                     )
-            if cleanup is not None:
-                cleanup()
             manifest.commit(commit_rows)
             res.partitions_done[stage] += len(batch)
             if failures_left[0] is not None:
@@ -333,6 +323,17 @@ def run_cascade(
                     raise InjectedFailure(
                         f"injected failure after a committed batch in {stage}"
                     )
+
+        for batch in _chunk(remaining, batch_size):
+            if not batch:
+                continue
+            # the frames a batch persists (the 1m enriched frame, the 1h
+            # frames, the repartitioned outputs) are released after it,
+            # also when it fails before its commit
+            try:
+                run_batch(batch)
+            finally:
+                release_caches()
         res.wall_ms[stage] = int((time.time() - t_stage) * 1000)
 
     def _batch_of(stage: str, part_key: str) -> str:
@@ -398,9 +399,8 @@ def run_cascade(
     encoded = spark.read.parquet(f"{out_root}/encode")
 
     def build_1m(sub: DataFrame, _batch):
-        enriched, tables = rollup_1m_fused(sub)
-        out = {name: _dated(df) for name, df in tables.items()}
-        return out, lambda: enriched.unpersist()
+        _enriched, tables = rollup_1m_fused(sub)
+        return {name: _dated(df) for name, df in tables.items()}
 
     run_stage(
         "rollup_1m",
@@ -427,7 +427,6 @@ def run_cascade(
     def build_1h1d(_sub, batch):
         days = [str(b) for b in batch]
         h_tables = {}
-        low_sc = None
         for tname in TABLES:
             low = spark.read.parquet(f"{out_root}/rollup_1m/{tname}").filter(
                 F.col("part_date").cast("string").isin(days)
@@ -436,9 +435,8 @@ def run_cascade(
                 # the 1m state_counts frame feeds BOTH the 1h merge and the
                 # gorilla point union — cache it so the batch scans the 1m
                 # parquet once instead of twice
-                low = low.persist()
-                low_sc = low
-            h_tables[tname] = _dated(merge_tier(low, tname, "1h")).persist()
+                low = low_sc = persist(low)
+            h_tables[tname] = persist(_dated(merge_tier(low, tname, "1h")))
         out = {f"rollup_1h/{t}": df for t, df in h_tables.items()}
         for tname, h in h_tables.items():
             out[f"rollup_1d/{tname}"] = _dated(merge_tier(h, tname, "1d"))
@@ -479,14 +477,7 @@ def run_cascade(
                 ts_col="ts",
                 value_col="value",
             )
-
-        def cleanup():
-            for df in h_tables.values():
-                df.unpersist()
-            if low_sc is not None:
-                low_sc.unpersist()
-
-        return out, cleanup
+        return out
 
     run_stage(
         "rollup_1h1d",

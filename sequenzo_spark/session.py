@@ -4,13 +4,19 @@ Defaults target the sandbox (single JVM, local[N]) but every setting is the
 one you would ship to a 1000-executor cluster: AQE on (runtime coalescing +
 skew-join splitting), Arrow on (all custom kernels are pandas/Arrow UDFs,
 never per-row Python), shuffle partitions sized to the parallelism level.
+
+The session also owns the engine's one cache registry: every frame the
+operators, the driver queries and the cascade persist goes through
+:func:`persist`, and :func:`release_caches` unpersists them all.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_LIVE_CACHES: list[DataFrame] = []
 
 
 def get_spark(
@@ -53,3 +59,25 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it for :func:`release_caches`."""
+    df = df.persist()
+    _LIVE_CACHES.append(df)
+    return df
+
+
+def release_caches() -> int:
+    """Unpersist every frame :func:`persist` registered since the last
+    release and return their number. Plans that still reference a released
+    frame simply recompute it. ``list.pop`` is atomic, so threads may
+    release concurrently."""
+    n = 0
+    while True:
+        try:
+            df = _LIVE_CACHES.pop()
+        except IndexError:
+            return n
+        df.unpersist()
+        n += 1

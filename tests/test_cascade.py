@@ -148,6 +148,28 @@ def test_kill_and_resume_identical_output(spark, raw, tmp_path):
     assert {r.stage for r in rows} == {"encode", "rollup_1m", "rollup_1h1d"}
 
 
+def test_failed_batch_leaves_no_persisted_rdds(spark, tmp_path, monkeypatch):
+    """A batch that fails before its commit still releases what it
+    persisted: the 1m enriched frame and the repartitioned outputs."""
+    import sequenzo_spark.rollup.cascade as cascade
+
+    def fail(*_args):
+        raise RuntimeError("metrics failed")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    small = generate_transcripts(spark, n_convs=10, seed=5)
+    before = persisted()
+    monkeypatch.setattr(cascade, "partition_metrics", fail)
+    with pytest.raises(RuntimeError, match="metrics failed"):
+        run_cascade(
+            spark, small, str(tmp_path / "failed"), states=ROLE_ALPHABET,
+            salt_buckets=SALT, job_id="jf",
+        )
+    assert persisted() <= before
+
+
 def test_cascade_empty_input(spark, raw, tmp_path):
     """Empty transcripts: the min/max-ts encode-batch derivation returns
     (None, None) — the cascade must run zero encode batches (and zero rows

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 from sequenzo_spark.driver_queries import ORACLE_SQL, QUERIES
+from sequenzo_spark.session import release_caches
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -45,7 +46,14 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SQL))
 def test_query_matches_oracle(name, spark, duck):
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
     got_raw = QUERIES[name](spark, SF_DIR).toPandas()
+    # the one release name drains whatever the query persisted
+    release_caches()
+    assert persisted() <= before, f"{name}: persisted RDDs left over"
     want_raw = duck.execute(ORACLE_SQL[name]).df()
     got, want = _normalize(got_raw), _normalize(want_raw)
     assert list(got.columns) == list(want.columns), (

@@ -9,6 +9,8 @@ performance bug even when sf0.001 results stay correct.
 
 from pyspark.sql import functions as F
 
+from sequenzo_spark.session import release_caches
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -71,7 +73,7 @@ def test_fused_1m_rollup_shuffles_once(spark):
         n_exchanges = plan.count("Exchange hashpartitioning")
         assert n_exchanges == 1, f"{n_exchanges} exchanges:\n{plan[:3000]}"
     finally:
-        enriched.unpersist()
+        release_caches()
 
 
 def test_spell_table_reuses_sequence_partitioning(spark, toy):
@@ -196,7 +198,6 @@ def test_topp_selection_has_no_global_window(spark):
     partition spec (the round-5 verdict's scale-killer funnelled every
     per-sequence score through one task)."""
     from sequenzo_spark.driver_queries import QUERIES
-    from sequenzo_spark.operators.suffix_tree import release_suffix_caches
 
     for q in ("suffix_convergence_topp", "prefix_divergence_topp"):
         plan = _plan(QUERIES[q](spark, SF_DIR))
@@ -214,7 +215,7 @@ def test_topp_selection_has_no_global_window(spark):
                     break
         # the boundary-tie rank plans as a bounded TakeOrdered
         assert "TakeOrderedAndProject" in plan, f"{q}:\n{plan[:2000]}"
-        release_suffix_caches()
+        release_caches()
 
 
 def test_suffix_convergence_broadcasts_level_stats(spark):
@@ -226,14 +227,6 @@ def test_suffix_convergence_broadcasts_level_stats(spark):
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
-TREE_QUERIES = (
-    "prefix_tree_stats", "prefix_rarity", "prefix_divergence",
-    "prefix_divergence_topp", "spell_prefix_stats", "suffix_tree_stats",
-    "suffix_rarity", "suffix_convergence", "suffix_convergence_topp",
-    "spell_suffix_stats",
-)
-
-
 def test_topp_selection_job_count(spark):
     """The ungrouped top_proportion selection reads s* (the k-th most
     extreme score) and its tie budget (how often s* appears in the top k)
@@ -242,12 +235,11 @@ def test_topp_selection_job_count(spark):
     Group-less jobs submitted in the window (engine thread pools) are
     counted too."""
     from sequenzo_spark.driver_queries import QUERIES
-    from sequenzo_spark.operators.prefix_tree import release_prefix_caches
 
     sc = spark.sparkContext
     st = sc.statusTracker()
     for q in ("prefix_divergence_topp", "suffix_convergence_topp"):
-        release_prefix_caches()
+        release_caches()
         group = f"test-jobs-{q}"
         loose = set(st.getJobIdsForGroup(None))
         sc.setJobGroup(group, group)
@@ -259,26 +251,35 @@ def test_topp_selection_job_count(spark):
         n = len(st.getJobIdsForGroup(group))
         n += len(set(st.getJobIdsForGroup(None)) - loose)
         assert n == 24, (q, n)
-    release_prefix_caches()
+    release_caches()
 
 
 def test_tree_queries_leave_no_persisted_rdds(spark):
-    """Prefix and suffix operators share ONE cache registry, so either
-    release name drains what any tree query persisted (the topp queries
-    persist their rarity and scored frames). Every tree query plus
-    a release — the OTHER module's name, to pin the shared registry —
-    leaves no persisted RDD beyond those alive before the test."""
+    """The oracle parity test checks the persisted-RDD count after every
+    oracled query (the ten tree queries among them); this covers the three
+    queries without an oracle. One release drains what each persisted
+    (``minhash_lsh_candidates`` persists its signature table)."""
     from sequenzo_spark.driver_queries import QUERIES
-    from sequenzo_spark.operators.prefix_tree import release_prefix_caches
-    from sequenzo_spark.operators.suffix_tree import release_suffix_caches
 
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    release_prefix_caches()
+    release_caches()
     before = persisted()
-    for q in TREE_QUERIES:
+    for q in ("turbulence", "turbulence_norm", "minhash_lsh_candidates"):
         QUERIES[q](spark, SF_DIR).collect()
-        (release_suffix_caches if q.startswith(("prefix", "spell_prefix"))
-         else release_prefix_caches)()
+        release_caches()
         assert persisted() <= before, q
+
+
+def test_release_names_are_the_session_registry():
+    """The four module release names are aliases of the one registry."""
+    from sequenzo_spark import session
+    from sequenzo_spark.operators.prefix_tree import release_prefix_caches
+    from sequenzo_spark.operators.subsequences import release_stats_caches
+    from sequenzo_spark.operators.suffix_tree import release_suffix_caches
+    from sequenzo_spark.pipeline.dedup import release_sig_caches
+
+    for name in (release_prefix_caches, release_suffix_caches,
+                 release_stats_caches, release_sig_caches):
+        assert name is session.release_caches

@@ -12,6 +12,7 @@ from sequenzo_spark.rollup.aggregates import (
     with_conv_bucket,
 )
 from sequenzo_spark.schema import ROLE_ALPHABET, TRANSCRIPT_SCHEMA
+from sequenzo_spark.session import release_caches
 from sequenzo_spark.streaming.rollup_stream import streaming_state_counts_1m
 from sequenzo_spark.synth import generate_transcripts
 
@@ -38,7 +39,7 @@ def test_streaming_matches_batch_1m(spark, tmp_path):
     q.awaitTermination(120)
 
     got = spark.read.parquet(out)
-    enriched, tables = rollup_1m_fused(
+    _enriched, tables = rollup_1m_fused(
         with_conv_bucket(raw, buckets=SALT).withColumn("state", F.col("role"))
     )
     want = tables["state_counts"]
@@ -52,7 +53,7 @@ def test_streaming_matches_batch_1m(spark, tmp_path):
         (r.conv_bucket, r.time_bucket, r.state): (r.n_turns, r.w_sum)
         for r in want.collect()
     }
-    enriched.unpersist()
+    release_caches()
     assert len(emitted) > 0
     for k, v in emitted.items():
         assert expected[k] == v, k
