@@ -158,9 +158,10 @@ Caveats (single-box): all parallelism levels share one memory bus, one
 page cache, and one JVM heap per process — a real 4× executor cluster
 multiplies those resources too, so this measurement is a LOWER bound on
 cluster scaling for the shuffle/scan-bound stages. Fixed driver-side job
-latency (~2-5 s/stage: planning, manifest commit, dynamic-overwrite file
-moves) is identical at both levels and sized into the input (~40M turns) so
-it amortizes below 10% of wall.
+latency (~2-5 s/stage: planning, dynamic-overwrite file moves, the manifest
+commit; the manifest's rows and checksums come from observations on the
+writes, with no separate metrics job) is identical at both levels and sized
+into the input (~40M turns) so it amortizes below 10% of wall.
 
 Raw JSON (every run, medians taken per level):
 

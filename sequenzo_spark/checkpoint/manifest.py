@@ -9,9 +9,15 @@ recomputed.
 Storage here is an append-only parquet directory (each commit = one new
 file, which is atomic-enough on a local FS and maps 1:1 onto an Iceberg
 `append` snapshot in production — this sandbox ships no Iceberg runtime
-jars, so the table format is parquet with the same commit protocol).
-Checksums are order-independent (bit_xor of per-row xxhash64), so two runs
-at different parallelism produce comparable lineage.
+jars, so the table format is parquet with the same commit protocol). Both
+the commit and the resume lookup (``completed``) run on the driver with
+pyarrow; ``stats`` returns the rows as a Spark DataFrame for analysis.
+
+Checksums are order-independent (bit_xor of ``row_hash``, a per-row
+xxhash64), so two runs at different parallelism produce comparable lineage.
+The cascade takes each partition's ``rows_out`` and checksum from
+observations on the write itself (rollup/cascade.py); ``partition_metrics``
+is the same definition as a grouped aggregate over any frame.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,27 +48,37 @@ class Manifest:
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame | None:
-        """The manifest rows, or None before the first commit creates the
-        directory. Any other read error propagates."""
+    def _files(self) -> list[str]:
+        """The committed lineage files. Like Spark's reader, skip names that
+        start with "." or "_": an in-flight commit's ``.tmp-*`` file is not
+        lineage until its rename."""
         if not os.path.isdir(self.path):
-            return None
-        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
+            return []
+        return sorted(
+            os.path.join(self.path, n)
+            for n in os.listdir(self.path)
+            if not n.startswith((".", "_"))
+        )
 
     def completed(self, job_id: str, stage: str) -> set[str]:
-        """Partition keys already committed for (job, stage). A partition
-        counts as complete only when ALL its tables are present — the commit
-        writes them together, so presence of any row implies all."""
-        df = self._read()
-        if df is None:
+        """Partition keys already committed for (job, stage), read on the
+        driver with pyarrow (no Spark job). A partition counts as complete
+        only when ALL its tables are present — the commit writes them
+        together, so presence of any row implies all."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        files = self._files()
+        if not files:
             return set()
-        rows = (
-            df.filter((F.col("job_id") == job_id) & (F.col("stage") == stage))
-            .select("partition_key")
-            .distinct()
-            .collect()
+        keys = pa.schema(
+            [(c, pa.string()) for c in ("job_id", "stage", "partition_key")]
         )
-        return {r.partition_key for r in rows}
+        rows = ds.dataset(files, schema=keys, format="parquet").to_table(
+            columns=["partition_key"],
+            filter=(ds.field("job_id") == job_id) & (ds.field("stage") == stage),
+        )
+        return set(rows.column("partition_key").to_pylist())
 
     def commit(self, rows: list[dict]) -> None:
         """Append one parquet file with the batch's lineage rows.
@@ -109,17 +125,24 @@ class Manifest:
         os.rename(tmp, final)
 
     def stats(self, job_id: str | None = None) -> DataFrame | None:
-        df = self._read()
-        if df is not None and job_id:
-            df = df.filter(F.col("job_id") == job_id)
-        return df
+        """The manifest rows as a Spark DataFrame, or None before the first
+        commit creates the directory. Any other read error propagates."""
+        if not os.path.isdir(self.path):
+            return None
+        df = self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
+        return df.filter(F.col("job_id") == job_id) if job_id else df
+
+
+def row_hash(df: DataFrame) -> Column:
+    """The checksum's per-row term: xxhash64 over all of ``df``'s columns in
+    their order. A partition's checksum is the bit_xor of it over the
+    partition's rows."""
+    return F.xxhash64(*df.columns)
 
 
 def partition_metrics(df: DataFrame, *part_cols: str) -> DataFrame:
-    """Per-partition rows ``n`` and order-independent checksum ``cs`` =
-    bit_xor(xxhash64(<all columns>)), one aggregation keyed by ``part_cols``."""
-    return (
-        df.withColumn("_h", F.xxhash64(*df.columns))
-        .groupBy(*part_cols)
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(_h)").alias("cs"))
+    """Per-partition rows ``n`` and order-independent checksum ``cs``, one
+    aggregation keyed by ``part_cols``."""
+    return df.groupBy(*part_cols).agg(
+        F.count(F.lit(1)).alias("n"), F.bit_xor(row_hash(df)).alias("cs")
     )

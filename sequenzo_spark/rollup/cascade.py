@@ -25,6 +25,11 @@ Partitioning / batching / resume design:
   (checkpoint/manifest.py) and recomputes only missing ones. The manifest
   row is committed strictly AFTER the data write, so a crash leaves either
   (data+lineage) or (partial data, no lineage → overwritten on rerun).
+- Lineage rides the write: every table of every stage goes through one
+  observed write (``write_one`` in ``run_stage``). Its observation returns
+  ``rows_out`` and the checksum of each (conv_bucket, part_date) partition
+  the write produced, so there is no persist of the outputs, no separate
+  metrics job and no read-back, and encode is checksummed like the tiers.
 - Higher tiers read the lower tier's WRITTEN FILES, never the raw data.
 
 At 100 TB: `batch_*` bounds per-job input; salt_buckets spreads giant
@@ -38,12 +43,11 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sequenzo_spark.checkpoint.manifest import Manifest, partition_metrics
+from sequenzo_spark.checkpoint.manifest import Manifest, row_hash
 from sequenzo_spark.ingest import encode_states, refined_alphabet_col
 from sequenzo_spark.rollup.aggregates import (
     TABLES,
@@ -99,41 +103,6 @@ def _list_part_dates(path: str) -> list[str]:
         for d in glob.glob(os.path.join(path, "conv_bucket=*", "part_date=*"))
     }
     return sorted(vals)
-
-
-def _write_and_measure(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    read_filter=None,
-) -> list[tuple[str, int, int | None]]:
-    """Checksum-less write path (the bulk passthrough encode stage): write
-    partitioned parquet, then count rows per (cb,date) from the written
-    parquet FOOTERS (a columnless grouped count reads metadata only) — no
-    persist, no second pass over the data. The encode invariant is covered
-    separately by the text-passthrough check.
-
-    Checksummed tier tables take the fused persist→parallel-write→single
-    union-metrics job inside run_stage instead (one collect per STAGE, not
-    per table).
-
-    Repartitions by the write layout first: one task per (cb, date)
-    partition dir → one file each, instead of every task spraying a small
-    file into every dir (small-files write amplification)."""
-    df.repartition(*[F.col(c) for c in PART_COLS]).write.mode(
-        "overwrite"
-    ).partitionBy(*PART_COLS).parquet(path)
-    # read_filter restricts the footer-count read-back to THIS batch's
-    # partitions (partition pruning on the dir layout): without it each
-    # batch re-scans every footer written so far — O(batches²) metadata
-    # reads — and re-commits manifest rows for earlier batches.
-    rb = spark.read.parquet(path)
-    if read_filter is not None:
-        rb = rb.filter(read_filter)
-    agg = rb.groupBy(*PART_COLS).agg(F.count(F.lit(1)).alias("n")).collect()
-    return [
-        (f"{r['conv_bucket']}/{r['part_date']}", r["n"], None) for r in agg
-    ]
 
 
 def _check_job_config(
@@ -213,8 +182,6 @@ def run_cascade(
         build,  # (sub, batch) -> dict table -> DataFrame with PART_COLS
         src: DataFrame,
         batch_size: int | None,
-        checksums: bool = True,
-        read_filter_of=None,  # (batch) -> Column pruning the read-back
     ):
         # manifest rows are per fine (conv_bucket/part_date) partition; a
         # batch key is done iff any of its fine keys committed (they commit
@@ -235,7 +202,6 @@ def run_cascade(
             t0 = time.time()
             sub = batch_filter(src, batch)
             outputs = build(sub, batch)
-            commit_rows: list[dict] = []
 
             def _path_of(tname):
                 # a "/" in the table name addresses a path relative to
@@ -250,57 +216,47 @@ def run_cascade(
                     else f"{out_root}/{stage}"
                 )
 
-            if not checksums:
-                def write_one(item):
-                    tname, tdf = item
-                    return tname, _write_and_measure(
-                        spark,
-                        tdf,
-                        _path_of(tname),
-                        read_filter=(
-                            read_filter_of(batch) if read_filter_of else None
-                        ),
+            def write_one(tname, tdf):
+                """Write one table and take its manifest rows from the write
+                itself: a window over each (conv_bucket, part_date) the
+                write produces gives its rows_out and checksum, and the
+                observation collects one row per partition. No persist, no
+                second job and no read-back; per row the cost does not grow
+                with the number of partitions."""
+                obs = Observation()
+                part = Window.partitionBy(*PART_COLS)
+                # one task per (cb, date) dir → one file each, instead of
+                # every task spraying a small file into every dir; the
+                # window's sort by the partition columns is the sort the
+                # partitioned write needs anyway
+                (
+                    tdf.repartition(*PART_COLS)
+                    .select("*", row_hash(tdf).alias("_h"))
+                    .select(
+                        *tdf.columns,
+                        F.count(F.lit(1)).over(part).alias("_n"),
+                        F.bit_xor("_h").over(part).alias("_cs"),
                     )
-
-                with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
-                    results = list(pool.map(write_one, outputs.items()))
-            else:
-                # persist each table once; submit the (independent) write
-                # jobs concurrently so the scheduler interleaves them; then
-                # compute ALL tables' per-partition metrics in ONE job — a
-                # union of uniform (cb, date, n, checksum, table) aggregates.
-                # One collect instead of one per table: per-stage driver-job
-                # count is the cascade's fixed-cost floor, and it is what
-                # stops throughput from scaling when the per-level data work
-                # shrinks (BENCH/BASELINE.md).
-                reparted = {
-                    t: persist(tdf.repartition(*[F.col(c) for c in PART_COLS]))
-                    for t, tdf in outputs.items()
-                }
-                with ThreadPoolExecutor(max_workers=len(reparted)) as pool:
-                    list(
-                        pool.map(
-                            lambda item: item[1]
-                            .write.mode("overwrite")
-                            .partitionBy(*PART_COLS)
-                            .parquet(_path_of(item[0])),
-                            reparted.items(),
-                        )
+                    .observe(
+                        obs,
+                        F.collect_set(F.struct(*PART_COLS, "_n", "_cs")).alias("parts"),
                     )
-                metric_frames = [
-                    partition_metrics(tdf, *PART_COLS).withColumn(
-                        "_t", F.lit(tname)
-                    )
-                    for tname, tdf in reparted.items()
+                    .drop("_n", "_cs")
+                    .write.mode("overwrite")
+                    .partitionBy(*PART_COLS)
+                    .parquet(_path_of(tname))
+                )
+                return tname, [
+                    (f"{r['conv_bucket']}/{r['part_date']}", r["_n"], r["_cs"])
+                    for r in obs.get["parts"]
                 ]
-                agg = reduce(DataFrame.unionByName, metric_frames).collect()
-                results = {}
-                for r in agg:
-                    results.setdefault(r["_t"], []).append(
-                        (f"{r['conv_bucket']}/{r['part_date']}", r["n"], r["cs"])
-                    )
-                results = list(results.items())
+
+            # the tables' writes are independent: submit them concurrently
+            # so the scheduler interleaves them
+            with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+                results = list(pool.map(write_one, outputs, outputs.values()))
             wall = int((time.time() - t0) * 1000)
+            commit_rows: list[dict] = []
             for tname, metrics in results:
                 for key, n, cs in metrics:
                     res.rows_out[stage] += n
@@ -328,8 +284,8 @@ def run_cascade(
             if not batch:
                 continue
             # the frames a batch persists (the 1m enriched frame, the 1h
-            # frames, the repartitioned outputs) are released after it,
-            # also when it fails before its commit
+            # frames) are released after it, also when it fails before its
+            # commit
             try:
                 run_batch(batch)
             finally:
@@ -377,10 +333,6 @@ def run_cascade(
         lambda sub, _b: {"encoded_turns": encode_states(sub, states, state_col="state")},
         enc_src,
         batch_dates,
-        checksums=False,  # bulk passthrough: footer counts only (see above)
-        read_filter_of=lambda b: F.col("part_date")
-        .cast("string")
-        .isin([str(x) for x in b]),
     )
 
     if not enc_dates:
@@ -413,15 +365,16 @@ def run_cascade(
 
     # ---- stage: rollup_1h1d — FUSED 1m→1h→1d merge (round-4) -------------
     # The 1h and 1d tiers were separate stages through round 3; each stage
-    # carries a fixed driver cost (session scheduling, one metrics collect,
-    # manifest commit) that caps scaling efficiency once the per-level data
-    # work shrinks (BENCH/BASELINE.md). A 1d bucket needs exactly one
-    # part_date of 1h rows, so a date batch can compute BOTH tiers: 1h is
-    # aggregated from the 1m files, persisted, written, and the 1d merge
-    # reads the persisted 1h FRAMES (in-memory lineage) instead of reading
-    # the 1h files back. On-disk layout is unchanged (path-style table
-    # names), so readers (gorilla, queries, tests) see the same tree; both
-    # tiers' partitions commit atomically per batch in the manifest.
+    # carries a fixed driver cost (session scheduling, manifest commit) that
+    # caps scaling efficiency once the per-level data work shrinks
+    # (BENCH/BASELINE.md). A 1d bucket needs exactly one part_date of 1h
+    # rows, so a date batch can compute BOTH tiers: 1h is aggregated from
+    # the 1m files and persisted, because three consumers read it (its own
+    # write, the 1d merge and the Gorilla points). The 1d merge reads the
+    # persisted 1h FRAMES (in-memory lineage) instead of the 1h files.
+    # On-disk layout is unchanged (path-style table names), so readers
+    # (gorilla, queries, tests) see the same tree; both tiers' partitions
+    # commit atomically per batch in the manifest.
     dates = _list_part_dates(f"{out_root}/rollup_1m/state_counts")
 
     def build_1h1d(_sub, batch):

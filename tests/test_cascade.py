@@ -1,11 +1,13 @@
 """Cascade: bit-exact tier merges, boundary-safe windows, text passthrough,
-and kill→resume without recomputation of committed partitions."""
+write-time lineage equal to a read-back of the tables, and kill→resume
+without recomputation of committed partitions."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from sequenzo_spark.checkpoint.manifest import Manifest
+from sequenzo_spark.checkpoint.manifest import Manifest, partition_metrics
 from sequenzo_spark.rollup.cascade import (
+    PART_COLS,
     InjectedFailure,
     run_cascade,
     text_passthrough_violations,
@@ -25,15 +27,31 @@ def raw(spark):
     ).cache()
 
 
+TABLES = (
+    "encode",
+    "rollup_1m/state_counts", "rollup_1m/transitions", "rollup_1m/spells",
+    "rollup_1h/state_counts", "rollup_1h/transitions", "rollup_1h/spells",
+    "rollup_1d/state_counts", "rollup_1d/transitions", "rollup_1d/spells",
+    "gorilla/chunks",
+)
+
+
+@pytest.fixture(scope="module")
+def j1(spark, raw, tmp_path_factory):
+    """One full cascade over ``raw``: (out_root, result)."""
+    out = str(tmp_path_factory.mktemp("j1") / "cascade")
+    res = run_cascade(
+        spark, raw, out, states=ROLE_ALPHABET, salt_buckets=SALT, job_id="j1"
+    )
+    return out, res
+
+
 def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_cascade_end_to_end(spark, raw, tmp_path):
-    out = str(tmp_path / "cascade")
-    res = run_cascade(
-        spark, raw, out, states=ROLE_ALPHABET, salt_buckets=SALT, job_id="j1"
-    )
+def test_cascade_end_to_end(spark, raw, j1):
+    out, res = j1
     assert res.stages_run == ["encode", "rollup_1m", "rollup_1h1d"]
     assert all(v > 0 for v in res.rows_out.values())
 
@@ -129,13 +147,7 @@ def test_kill_and_resume_identical_output(spark, raw, tmp_path):
     assert sum(res.partitions_skipped.values()) >= 3
 
     # outputs identical to the clean one-shot run, bit-exactly
-    for table in (
-        "encode",
-        "rollup_1m/state_counts", "rollup_1m/transitions", "rollup_1m/spells",
-        "rollup_1h/state_counts", "rollup_1h/transitions", "rollup_1h/spells",
-        "rollup_1d/state_counts", "rollup_1d/transitions", "rollup_1d/spells",
-        "gorilla/chunks",
-    ):
+    for table in TABLES:
         a = spark.read.parquet(f"{clean_out}/{table}")
         b = spark.read.parquet(f"{crash_out}/{table}")
         cols = sorted(a.columns)
@@ -149,25 +161,106 @@ def test_kill_and_resume_identical_output(spark, raw, tmp_path):
 
 
 def test_failed_batch_leaves_no_persisted_rdds(spark, tmp_path, monkeypatch):
-    """A batch that fails before its commit still releases what it
-    persisted: the 1m enriched frame and the repartitioned outputs."""
-    import sequenzo_spark.rollup.cascade as cascade
-
-    def fail(*_args):
-        raise RuntimeError("metrics failed")
-
+    """A batch that fails after its write but before its lineage commit
+    still releases what it persisted: the 1m enriched frame, or the 1h
+    frames and the cached 1m state counts. Nothing of the failed stage is
+    committed."""
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     small = generate_transcripts(spark, n_convs=10, seed=5)
-    before = persisted()
-    monkeypatch.setattr(cascade, "partition_metrics", fail)
-    with pytest.raises(RuntimeError, match="metrics failed"):
-        run_cascade(
-            spark, small, str(tmp_path / "failed"), states=ROLE_ALPHABET,
-            salt_buckets=SALT, job_id="jf",
+    commit = Manifest.commit
+    for stage in ("rollup_1m", "rollup_1h1d"):
+        def failing_commit(m, rows, stage=stage):
+            if rows and rows[0]["stage"] == stage:
+                raise RuntimeError("commit failed")
+            commit(m, rows)
+
+        out = str(tmp_path / stage)
+        before = persisted()
+        monkeypatch.setattr(Manifest, "commit", failing_commit)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            run_cascade(
+                spark, small, out, states=ROLE_ALPHABET, salt_buckets=SALT,
+                job_id="jf",
+            )
+        monkeypatch.setattr(Manifest, "commit", commit)
+        assert persisted() <= before, stage
+        assert Manifest(spark, f"{out}/_manifest").completed("jf", stage) == set()
+
+
+def test_manifest_rows_equal_a_read_back_of_every_table(spark, j1):
+    """Each manifest row's (rows_out, checksum), taken from observations on
+    the write, equals ``partition_metrics`` over the table read back, with
+    the columns re-selected in the order they were written."""
+    out, _res = j1
+
+    def write_order(table, cols):
+        data = [c for c in cols if c not in PART_COLS]
+        if table == "encode":
+            i = data.index("state")  # the keys are added before the states
+            return data[:i] + PART_COLS + data[i:]
+        if table == "gorilla/chunks":  # the chunk key leads
+            return [data[0], "conv_bucket", data[1], "part_date", *data[2:]]
+        return ["conv_bucket", *data, "part_date"]
+
+    lineage = {}
+    for r in Manifest(spark, f"{out}/_manifest").stats("j1").collect():
+        table = "encode" if r.stage == "encode" else (
+            r.table if "/" in r.table else f"rollup_1m/{r.table}"
         )
-    assert persisted() <= before
+        lineage[(table, r.partition_key)] = (r.rows_out, r.checksum)
+    got = {}
+    for table in TABLES:
+        back = spark.read.parquet(f"{out}/{table}").withColumn(
+            "part_date", F.col("part_date").cast("string")
+        )
+        back = back.select(*write_order(table, back.columns))
+        for r in partition_metrics(back, *PART_COLS).collect():
+            got[(table, f"{r.conv_bucket}/{r.part_date}")] = (r.n, r.cs)
+    assert {t for t, _k in lineage} == set(TABLES)
+    assert all(cs is not None for _n, cs in lineage.values())
+    assert lineage == got
+
+
+def test_empty_day_commits_no_encode_row(spark, tmp_path):
+    """A calendar day without turns between two busy ones runs as an
+    encode batch but commits no manifest row."""
+    def day(d, tag):
+        return generate_transcripts(
+            spark, n_convs=8, seed=5, base_ts=f"{d} 10:00:00"
+        ).withColumn("conv_id", F.concat(F.lit(tag), "conv_id"))
+
+    out = str(tmp_path / "gap")
+    res = run_cascade(
+        spark, day("2024-01-01", "a").unionByName(day("2024-01-03", "c")),
+        out, states=ROLE_ALPHABET, salt_buckets=SALT, job_id="jg",
+        batch_dates=1,
+    )
+    assert res.partitions_done["encode"] == 3
+    committed = Manifest(spark, f"{out}/_manifest").completed("jg", "encode")
+    assert {k.split("/")[1] for k in committed} == {"2024-01-01", "2024-01-03"}
+
+
+def test_completed_ignores_an_in_flight_commit(spark, tmp_path):
+    """A commit writes a hidden ``.tmp-*`` file, then renames it. Until
+    the rename, its rows are not lineage."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    m = Manifest(spark, str(tmp_path / "_manifest"))
+    assert m.completed("j", "encode") == set()
+
+    def row(key):
+        return dict(job_id="j", stage="encode", partition_key=key,
+                    table="encoded_turns", rows_out=1, checksum=None, wall_ms=0)
+
+    m.commit([row("0/2024-01-01")])
+    stray = pa.Table.from_pylist([row("1/2024-01-01")])
+    pq.write_table(stray, str(tmp_path / "_manifest" / ".tmp-stray.parquet"))
+    assert m.completed("j", "encode") == {"0/2024-01-01"}
+    assert m.completed("j", "rollup_1m") == set()
+    assert m.completed("other", "encode") == set()
 
 
 def test_cascade_empty_input(spark, raw, tmp_path):

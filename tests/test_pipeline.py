@@ -228,3 +228,33 @@ def test_ngram_prefix_filter_mode_identical(spark, docs):
         )
         assert direct == pf, (tau, len(direct), len(pf))
         assert len(direct) > 0  # planted near-dups exist at every tau here
+
+
+def test_ngram_prefix_filter_keeps_pairs_at_the_threshold(spark):
+    """A 100-shingle doc and a 55-shingle doc inside it have Jaccard
+    55/100, exactly τ = 0.55, and the direct join keeps the pair. Their
+    overlap is exactly ⌈τ·100⌉ = 55, so the prefix bound must be that exact
+    ceiling: in doubles, 0.55·100 = 55.000000000000007 rounds up to 56 and
+    leaves the big doc an empty prefix."""
+    words = [f"w{i}" for i in range(102)]
+    other = [f"v{i}" for i in range(102)]
+    docs = spark.createDataFrame(
+        [
+            ("a", " ".join(words)),  # 100 shingles
+            ("b", " ".join(words[:57])),  # its first 55 shingles
+            ("c", " ".join(other)),
+            ("d", " ".join(other[45:])),  # the last 55 shingles of c
+        ],
+        "doc_id string, text string",
+    )
+    direct = sorted(
+        tuple(r) for r in ngram_jaccard_pairs(docs, threshold=0.55).collect()
+    )
+    pf = sorted(
+        tuple(r)
+        for r in ngram_jaccard_pairs(
+            docs, threshold=0.55, prefix_filter=True
+        ).collect()
+    )
+    assert direct == [("a", "b", 0.55), ("c", "d", 0.55)]
+    assert pf == direct

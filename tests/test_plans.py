@@ -254,6 +254,34 @@ def test_topp_selection_job_count(spark):
     release_caches()
 
 
+def test_cascade_job_count(spark, tmp_path):
+    """The cascade takes its manifest rows and checksums from observations
+    on its writes: no persisted outputs, no metrics job and no footer
+    read-back. On this fixed input (20 conversations crossing midnight,
+    4 buckets) a full run submits 54 Spark jobs, stable run to run; the two
+    write paths it replaced took 71. The scheduler's job counter sees the
+    jobs of every thread, whatever job group a reused thread carries."""
+    from sequenzo_spark.rollup.cascade import run_cascade
+    from sequenzo_spark.schema import ROLE_ALPHABET
+    from sequenzo_spark.synth import generate_transcripts
+
+    raw = generate_transcripts(
+        spark, n_convs=20, seed=1, base_ts="2024-01-01 23:30:00"
+    ).cache()
+    raw.count()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first = scheduler.numTotalJobs()
+    try:
+        run_cascade(
+            spark, raw, str(tmp_path / "cascade"), states=ROLE_ALPHABET,
+            salt_buckets=4, job_id="jobs",
+        )
+    finally:
+        raw.unpersist()
+    n = scheduler.numTotalJobs() - first
+    assert n == 54, n
+
+
 def test_tree_queries_leave_no_persisted_rdds(spark):
     """The oracle parity test checks the persisted-RDD count after every
     oracled query (the ten tree queries among them); this covers the three
