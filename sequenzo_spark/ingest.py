@@ -3,13 +3,14 @@
 Mirrors the reference's SequenceData ingest lifecycle (studied, not copied):
 eager validation with rich errors (_validate_parameters,
 /root/reference/sequenzo/define_sequence_data.py:267-511), explicit
-user-declared alphabet that may be a superset of observed states (:421-440),
-1-based integer encoding in declaration order (state_mapping, :795-838), and
-missing auto-appended as the extra code K+1 (:517-792).
+user-declared alphabet that may be a superset of observed states (:421-440).
+The reference appends missing as an extra code K+1 (:517-792); here a state
+outside the alphabet becomes null instead, and null is missing under the one
+policy of ``operators/spells.py``.
 
 In Spark the validation is a handful of cheap aggregate assertions over one
-scan, and the encoding is a single ``array_position`` expression — no UDF,
-dictionary-encoded further by parquet at write time.
+scan, and the encoding is a single ``isin`` expression — no UDF; parquet
+dictionary-encodes the state strings at write time.
 """
 
 from __future__ import annotations
@@ -86,26 +87,16 @@ def validate_transcripts(
 
 
 def encode_states(
-    df: DataFrame,
-    states: list[str],
-    state_col: str = "role",
-    out_col: str = "state_code",
-    missing_as_extra: bool = True,
+    df: DataFrame, states: list[str], state_col: str = "role"
 ) -> DataFrame:
-    """1-based codes in declaration order (state_mapping semantics, :808).
-
-    NULL / out-of-alphabet → code K+1 ('missing' appended as an extra state,
-    :815-830) when ``missing_as_extra``, else NULL."""
-    pos = F.array_position(
-        F.array(*[F.lit(s) for s in states]), F.col(state_col)
-    ).cast("int")
-    k = len(states)
-    code = F.when(pos > 0, pos)
-    code = (
-        code.otherwise(F.lit(k + 1)) if missing_as_extra
-        else code.otherwise(F.lit(None))
+    """Apply the declared alphabet (reference :421-440): a ``state_col``
+    value outside ``states`` becomes null, so the tiers see it as missing
+    under the one missing-state policy (``operators/spells.py``) instead of
+    as a state of its own. The cascade applies it to its derived ``state``
+    column, so the raw ``role`` passes through unchanged."""
+    return df.withColumn(
+        state_col, F.when(F.col(state_col).isin(states), F.col(state_col))
     )
-    return df.withColumn(out_col, code)
 
 
 def refined_alphabet_col(
@@ -116,28 +107,3 @@ def refined_alphabet_col(
         F.col(tool_col).isNotNull(),
         F.concat_ws(":", F.col(role_col), F.col(tool_col)),
     ).otherwise(F.col(role_col))
-
-
-def index_gap_report(
-    df: DataFrame,
-    seq_col: str = "conv_id",
-    order_col: str = "turn_idx",
-) -> dict[str, int]:
-    """has_void_in_data recast (define_sequence_data.py:232-236): in the
-    long, rows-absent model a 'void' is a HOLE in a sequence's ordinal index
-    (turn_idx jumps). Returns how many sequences have holes and the total
-    missing positions — one aggregate pass, no window needed:
-    holes(seq) = (max_idx − min_idx + 1) − count(rows)."""
-    g = df.groupBy(seq_col).agg(
-        (
-            F.max(order_col) - F.min(order_col) + 1 - F.count(F.lit(1))
-        ).alias("_holes")
-    )
-    r = g.agg(
-        F.sum((F.col("_holes") > 0).cast("long")).alias("seqs_with_gaps"),
-        F.sum("_holes").alias("missing_positions"),
-    ).first()
-    return {
-        "seqs_with_gaps": int(r["seqs_with_gaps"] or 0),
-        "missing_positions": int(r["missing_positions"] or 0),
-    }

@@ -9,6 +9,7 @@ from sequenzo_spark.operators.distributions import (
     cross_sectional_distribution,
     cross_sectional_entropy,
     flag_top_states,
+    fold_distribution,
     js_divergence_consecutive,
     modal_sequence_occurrences,
     modal_state,
@@ -36,6 +37,7 @@ __all__ = [
     "cross_sectional_distribution",
     "cross_sectional_entropy",
     "flag_top_states",
+    "fold_distribution",
     "js_divergence_consecutive",
     "modal_state",
     "modal_sequence_occurrences",

@@ -11,9 +11,12 @@ Reference semantics (studied, not copied):
   argmax of the weighted frequency matrix (:171-177).
 
 This is THE continuous aggregate of the rollup engine: per (time bucket,
-state) weighted counts are the stored algebraic state; freq / entropy /
-effective-states / rank / modal are derived columns recomputed from counts at
-every tier. All expressions — no UDF, two hash aggregations + one window.
+state) weighted counts are the stored algebraic state; entropy / effective
+states / modal are derived from counts by ONE sorted fold,
+:func:`fold_distribution`, which the driver queries and the cascade tiers
+(``rollup.aggregates.derive_distribution``) both call. Missing states are
+skipped by the counts (policy: ``operators/spells.py``). All expressions —
+no UDF.
 """
 
 from __future__ import annotations
@@ -47,62 +50,84 @@ def cross_sectional_distribution(
     )
 
 
-def cross_sectional_entropy(
-    dist: DataFrame,
-    n_states: int | None = None,
-    normalize: bool = True,
+def fold_distribution(
+    counts: DataFrame, count_col: str, n_states: int | None = None
 ) -> DataFrame:
-    """Per bucket: Shannon entropy of the state distribution.
+    """THE per-bucket distribution fold, shared by the driver queries
+    (:func:`cross_sectional_entropy`, :func:`modal_state`) and the tiers
+    (``rollup.aggregates.derive_distribution``).
 
-    Input is the output of :func:`cross_sectional_distribution` (or any frame
-    with time_bucket/state_count), so entropy is always derived from counts —
-    the algebraic tier state. ``n_states`` is the declared alphabet size K
-    for ln-K normalization (reference :114-116); if None it is computed as
-    the global distinct-state count (broadcast scalar join — the reference's
-    superset-alphabet regime when the alphabet equals the observed set).
+    Input: (time_bucket, state, ``count_col``) with one row per state of a
+    bucket. The bucket's (state, count) pairs are collected, sorted by state
+    and folded once, so every float is identical at any parallelism. One
+    row per bucket:
 
-    The per-bucket counts are folded in SORTED state order (array_sort +
-    aggregate) so the float64 result is identical at any parallelism — the
-    bit-exactness requirement — and the whole computation is one hash
-    aggregation, no window pass.
+    - n_valid: the count total (seqstatd N_valid, :107);
+    - entropy: -Σ p ln p (:112), ``+ 0.0`` turning IEEE −0.0 into +0.0;
+    - effective_states: e^entropy (:121);
+    - modal_state / modal_count: the largest count, ties to the smaller
+      state (seqmodst argmax, cross_sectional_indicators.py:171-177);
+    - entropy_norm, when ``n_states`` (the declared alphabet size K) is
+      given: entropy / ln K (:114-116), 0.0 where ln K = 0.
+    """
+    g = counts.groupBy("time_bucket").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct("state", F.col(count_col).cast("double").alias("c"))
+            )
+        ).alias("_arr")
+    )
+    g = g.withColumn(
+        "n_valid", F.aggregate("_arr", F.lit(0.0), lambda a, s: a + s["c"])
+    )
+
+    def p(s):
+        return s["c"] / F.col("n_valid")
+
+    ent = F.aggregate("_arr", F.lit(0.0), lambda a, s: a + p(s) * F.log(p(s)))
+    none = F.struct(F.lit(None).cast("string").alias("state"), F.lit(-1.0).alias("c"))
+    modal = F.aggregate(
+        "_arr", none, lambda acc, s: F.when(s["c"] > acc["c"], s).otherwise(acc)
+    )
+    g = g.select(
+        "time_bucket",
+        "n_valid",
+        (-ent + F.lit(0.0)).alias("entropy"),
+        modal["state"].alias("modal_state"),
+        modal["c"].alias("modal_count"),
+    )
+    cols = [
+        "time_bucket",
+        "n_valid",
+        "entropy",
+        F.exp("entropy").alias("effective_states"),
+        "modal_state",
+        "modal_count",
+    ]
+    if n_states is not None:
+        ln_k = F.log(F.lit(float(n_states)))
+        cols.append(
+            F.when(ln_k == 0.0, F.lit(0.0))
+            .otherwise(F.col("entropy") / ln_k)
+            .alias("entropy_norm")
+        )
+    return g.select(*cols)
+
+
+def cross_sectional_entropy(dist: DataFrame, n_states: int) -> DataFrame:
+    """Per bucket: Shannon entropy of the state distribution, normalized by
+    ln K for the declared alphabet size ``n_states`` = K (reference
+    :114-116) — :func:`fold_distribution` over ``state_count``.
+
+    Input is the output of :func:`cross_sectional_distribution` (or any
+    frame with time_bucket/state/state_count), so entropy is always derived
+    from counts — the algebraic tier state.
 
     Output: time_bucket, n_valid, entropy, entropy_norm, effective_states.
     """
-    g = dist.groupBy("time_bucket").agg(
-        F.array_sort(
-            F.collect_list(F.struct("state", "state_count"))
-        ).alias("_arr")
+    return fold_distribution(dist, "state_count", n_states).select(
+        "time_bucket", "n_valid", "entropy", "entropy_norm", "effective_states"
     )
-    n_valid = F.aggregate(
-        F.col("_arr"), F.lit(0.0), lambda a, s: a + s["state_count"]
-    )
-    g = g.withColumn("n_valid", n_valid)
-    ent_sum = F.aggregate(
-        F.col("_arr"),
-        F.lit(0.0),
-        lambda a, s: a
-        + (s["state_count"] / F.col("n_valid"))
-        * F.log(s["state_count"] / F.col("n_valid")),
-    )
-    ent = g.select(
-        "time_bucket", "n_valid", (-ent_sum + F.lit(0.0)).alias("entropy")
-    )
-    if normalize:
-        if n_states is None:
-            k = dist.select(
-                F.countDistinct("state").alias("_k")
-            )  # 1-row; broadcast cross join
-            ent = ent.crossJoin(F.broadcast(k))
-            knorm = F.log(F.col("_k").cast("double"))
-        else:
-            knorm = F.log(F.lit(float(n_states)))
-        ent = ent.withColumn(
-            "entropy_norm",
-            F.when(knorm == 0.0, F.lit(0.0)).otherwise(F.col("entropy") / knorm),
-        )
-        if n_states is None:
-            ent = ent.drop("_k")
-    return ent.withColumn("effective_states", F.exp(F.col("entropy")))
 
 
 def js_divergence_consecutive(
@@ -183,16 +208,14 @@ def js_divergence_consecutive(
 
 def modal_state(dist: DataFrame) -> DataFrame:
     """Per bucket: the modal (argmax-frequency) state and its share —
-    seqmodst semantics (:171-177). Ties broken by state name ascending so the
-    result is deterministic under any shuffle order."""
-    return (
-        dist.filter(F.col("freq_rank") == 1)
-        .select(
-            "time_bucket",
-            F.col("state").alias("modal_state"),
-            F.col("state_count").alias("modal_count"),
-            F.col("freq").alias("modal_freq"),
-        )
+    seqmodst semantics (:171-177) from :func:`fold_distribution`. Ties go
+    to the smaller state name, so the result is deterministic under any
+    shuffle order."""
+    return fold_distribution(dist, "state_count").select(
+        "time_bucket",
+        "modal_state",
+        "modal_count",
+        (F.col("modal_count") / F.col("n_valid")).alias("modal_freq"),
     )
 
 

@@ -17,8 +17,27 @@ cascading stays bit-exact (SURVEY.md §4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+
+
+def pair_columns(
+    w: WindowSpec, state_col: str = "state", lag: int = 1
+) -> list[Column]:
+    """A turn's transition pair as columns over the sequence window ``w``:
+    its own UNFILLED state (from_state) and the state ``lag`` turns ahead
+    (to_state). A pair counts only where :func:`is_pair` holds — both ends
+    valid, the missing-state policy of ``operators/spells.py``. The cascade's
+    fused 1m pass puts these columns in its own window pass."""
+    return [
+        F.col(state_col).alias("from_state"),
+        F.lead(state_col, lag).over(w).alias("to_state"),
+    ]
+
+
+def is_pair() -> Column:
+    """Both ends of a :func:`pair_columns` pair are valid states."""
+    return F.col("from_state").isNotNull() & F.col("to_state").isNotNull()
 
 
 def transition_pairs(
@@ -33,14 +52,7 @@ def transition_pairs(
     whose ``lag``-ahead successor exists in the same sequence."""
     w = Window.partitionBy(seq_col).orderBy(order_col)
     keep = [seq_col, order_col] + (extra_cols or [])
-    return (
-        df.select(
-            *keep,
-            F.col(state_col).alias("from_state"),
-            F.lead(state_col, lag).over(w).alias("to_state"),
-        )
-        .filter(F.col("from_state").isNotNull() & F.col("to_state").isNotNull())
-    )
+    return df.select(*keep, *pair_columns(w, state_col, lag)).filter(is_pair())
 
 
 def transition_counts(
@@ -70,17 +82,18 @@ def transition_counts(
 def transition_rates(
     counts: DataFrame,
     bucket_col: str | None = None,
+    count_col: str = "transition_count",
 ) -> DataFrame:
-    """Row-normalize transition counts into P(to|from).
+    """Row-normalize the transition counts in ``count_col`` into P(to|from).
 
     Derived (not stored) per tier: rates at 1h/1d are recomputed from the
-    merged 1m counts, never averaged — which is what keeps tiers bit-exact.
+    merged 1m counts, never averaged — which is what keeps tiers bit-exact
+    (``rollup.aggregates.derive_transition_rates`` calls this on ``w_count``).
     """
     part = ([bucket_col] if bucket_col else []) + ["from_state"]
     w = Window.partitionBy(*part)
     return counts.withColumn(
-        "transition_rate",
-        F.col("transition_count") / F.sum("transition_count").over(w),
+        "transition_rate", F.col(count_col) / F.sum(count_col).over(w)
     )
 
 

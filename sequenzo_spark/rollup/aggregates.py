@@ -2,12 +2,19 @@
 
 The cascade stores ONLY algebraic quantities per tier — the counts, sums,
 sums of squares, minima and maxima that ``TABLES`` declares for
-state_counts, transitions and spells — all exactly re-mergeable (sums of integers / integer-valued doubles are
-associative-exact in float64 below 2^53, min/max trivially), which is what
-makes 1m→1h→1d bit-exact (SURVEY.md §4). Derived floats (freq, entropy,
-rates, means, variances) are recomputed from merged counts at every tier by
-``derive_*`` with a DETERMINISTIC reduction order (array_sort by state before
-the fold), never depending on shuffle order or parallelism.
+state_counts, transitions and spells — all exactly re-mergeable (sums of
+integers / integer-valued doubles are associative-exact in float64 below
+2^53, min/max trivially), which is what makes 1m→1h→1d bit-exact (SURVEY.md
+§4). Derived floats (freq, entropy, rates, means, variances) are recomputed
+from merged counts at every tier by ``derive_*`` with a DETERMINISTIC
+reduction order (array_sort by state before the fold), never depending on
+shuffle order or parallelism.
+
+One definition per statistic: the 1m rows come from the operators the
+driver queries call (``spell_table``, ``transitions.pair_columns``), and the
+derivations are ``merge`` plus an operator (``fold_distribution``,
+``transition_rates``). Null and out-of-alphabet states follow the one
+missing-state policy written in ``operators/spells.py``.
 
 Semantics derive from the reference (studied, not copied):
 - per-bucket weighted state frequencies / entropy: seqstatd,
@@ -28,6 +35,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sequenzo_spark.operators.distributions import fold_distribution
+from sequenzo_spark.operators.spells import spell_table
+from sequenzo_spark.operators.transitions import (
+    is_pair,
+    pair_columns,
+    transition_rates,
+)
 from sequenzo_spark.session import persist
 
 BUCKET_EXPRS = {
@@ -97,47 +111,44 @@ def merge_tier(df: DataFrame, table: str, tier: str) -> DataFrame:
 # ------------------------------------------------------------ raw → 1m
 
 def rollup_1m_fused(turns: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """All three 1m tables from ONE window pass over (conv_id, turn_idx).
+    """All three 1m tables from ONE window partitioning by conversation.
 
-    lead (transitions), lag (spell boundary) and row_number (spell length)
-    share the same (seq, order) window spec, so Catalyst plans a single Window
-    node → exactly one shuffle by conv_id for the whole raw→1m stage; the
-    enriched frame is persisted and the three aggregations read the cache.
+    The sequence key is ``_seq`` = (conv_bucket, conv_id). One window pass
+    over (_seq, turn_idx) adds the transition pair columns
+    (``transitions.pair_columns``); the enriched frame keeps every turn,
+    null states included, and is persisted for the three tables:
 
+    - state_counts: the turns with a valid state;
+    - transitions: the rows where ``is_pair`` holds;
+    - spells: ``spell_table`` over the enriched frame, each spell in the
+      minute of its first turn (``ts_start``). Once the cache is built,
+      its windows and its groupBy run in the cache's (_seq) partitioning
+      with no shuffle of their own.
+
+    Null states follow the one missing-state policy (``operators/spells.py``).
     Returns (enriched, {table: df}); ``session.release_caches`` drops the
-    enriched cache. NULL states are dropped (rows absent = void, SURVEY.md
-    §1.1); LOCF-style fill happens upstream at encode if desired.
+    enriched cache.
     """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    prev = F.lag("state").over(w)
+    w = Window.partitionBy("_seq").orderBy("turn_idx")
     enriched = persist(
-        turns.filter(F.col("state").isNotNull()).select(
-            "conv_bucket",
-            F.col("conv_id").alias("_seq"),
-            "state",
-            "ts",
-            F.lead("state").over(w).alias("next_state"),
-            (prev.isNull() | (prev != F.col("state"))).alias("is_boundary"),
-            F.row_number().over(w).alias("_rk"),
-            F.count(F.lit(1)).over(Window.partitionBy("conv_id")).alias("_len"),
+        turns.withColumn("_seq", F.struct("conv_bucket", "conv_id")).select(
+            "conv_bucket", "_seq", "turn_idx", "ts", *pair_columns(w)
         )
     )
-    pairs = enriched.filter(F.col("next_state").isNotNull()).select(
-        "conv_bucket",
-        "ts",
-        F.col("state").alias("from_state"),
-        F.col("next_state").alias("to_state"),
-    )
-    # spells without a per-(seq, spell) shuffle: each spell is its boundary
-    # row; duration = next boundary's rank − own rank (or to end of seq).
-    # The boundary-row lead() shares the (seq, order) partitioning of the
-    # first window pass — no extra exchange of the wide data.
-    next_rk = F.lead("_rk").over(Window.partitionBy("_seq").orderBy("_rk"))
-    spells = enriched.filter(F.col("is_boundary")).withColumn(
-        "duration", F.coalesce(next_rk, F.col("_len") + 1) - F.col("_rk")
-    )
+    spells = spell_table(enriched, "_seq", "turn_idx", "from_state", ts_col="ts")
+    rows = {
+        "state_counts": enriched.filter(F.col("from_state").isNotNull()).select(
+            "conv_bucket", "ts", F.col("from_state").alias("state")
+        ),
+        "transitions": enriched.filter(is_pair()),
+        "spells": spells.select(
+            F.col("_seq.conv_bucket").alias("conv_bucket"),
+            F.col("ts_start").alias("ts"),
+            "state",
+            "duration",
+        ),
+    }
     minute = BUCKET_EXPRS["1m"](F.col("ts"))
-    rows = {"state_counts": enriched, "transitions": pairs, "spells": spells}
     return enriched, {
         t: merge(units(df, t), t, minute, ["conv_bucket"]) for t, df in rows.items()
     }
@@ -145,70 +156,24 @@ def rollup_1m_fused(turns: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
 
 # ------------------------------------------------------------ derivations
 # Each derivation first merges its table over conv_bucket (``by=[]``: one
-# row per time bucket and key), then computes floats from the merged state.
+# row per time bucket and key), then computes floats from the merged state
+# with the operator the driver queries call.
 
 def derive_distribution(
     state_counts: DataFrame, n_states: int | None = None
 ) -> DataFrame:
-    """freq / entropy / modal per time bucket, derived from counts with a
-    deterministic state-ordered fold (bit-stable at any parallelism).
-
-    Entropy per seqstatd (:112-121); `+ 0.0` normalizes IEEE −0.0 so the
-    stored bit pattern of a zero entropy is always that of +0.0."""
+    """n_valid / entropy / effective states / modal per time bucket (and
+    entropy_norm given the alphabet size): ``fold_distribution`` over the
+    merged ``w_sum``, bit-stable at any parallelism."""
     rolled = merge(state_counts, "state_counts", F.col("time_bucket"), [])
-    arr = F.array_sort(F.collect_list(F.struct("state", "w_sum", "n_turns")))
-    g = rolled.groupBy("time_bucket").agg(arr.alias("_arr"))
-    total = F.aggregate(
-        F.col("_arr"), F.lit(0.0), lambda a, s: a + s["w_sum"]
-    )
-    g = g.withColumn("n_valid", total)
-    ent = F.aggregate(
-        F.col("_arr"),
-        F.lit(0.0),
-        lambda a, s: a
-        + (s["w_sum"] / F.col("n_valid")) * F.log(s["w_sum"] / F.col("n_valid")),
-    )
-    g = g.withColumn("entropy", -ent + F.lit(0.0))
-    if n_states:
-        import math
-
-        g = g.withColumn(
-            "entropy_norm", F.col("entropy") / F.lit(math.log(n_states))
-        )
-    # modal = max w_sum, ties by state ascending — scan of the sorted array
-    modal = F.aggregate(
-        F.col("_arr"),
-        F.struct(
-            F.lit(None).cast("string").alias("state"),
-            F.lit(-1.0).alias("w"),
-        ),
-        lambda acc, s: F.when(
-            s["w_sum"] > acc["w"],
-            F.struct(s["state"].alias("state"), s["w_sum"].alias("w")),
-        ).otherwise(acc),
-    )
-    g = (
-        g.withColumn("modal_state", modal["state"])
-        .withColumn("modal_count", modal["w"])
-        .withColumn("effective_states", F.exp(F.col("entropy")))
-    )
-    out_cols = [
-        "time_bucket",
-        "n_valid",
-        "entropy",
-        "effective_states",
-        "modal_state",
-        "modal_count",
-    ] + (["entropy_norm"] if n_states else [])
-    return g.select(*out_cols)
+    return fold_distribution(rolled, "w_sum", n_states)
 
 
 def derive_transition_rates(transitions: DataFrame) -> DataFrame:
-    w = Window.partitionBy("time_bucket", "from_state")
+    """P(to|from) per time bucket: ``transition_rates`` over the merged
+    ``w_count``."""
     rolled = merge(transitions, "transitions", F.col("time_bucket"), [])
-    return rolled.withColumn(
-        "transition_rate", F.col("w_count") / F.sum("w_count").over(w)
-    )
+    return transition_rates(rolled, "time_bucket", "w_count")
 
 
 def derive_spell_stats(spells: DataFrame) -> DataFrame:

@@ -55,7 +55,7 @@ from sequenzo_spark.rollup.aggregates import (
     rollup_1m_fused,
     with_conv_bucket,
 )
-from sequenzo_spark.session import persist, release_caches
+from sequenzo_spark.session import build_caches, persist, release_caches
 
 PART_COLS = ["conv_bucket", "part_date"]
 
@@ -202,6 +202,11 @@ def run_cascade(
             t0 = time.time()
             sub = batch_filter(src, batch)
             outputs = build(sub, batch)
+            # the tables' concurrent writes share the frames build persisted;
+            # a write that finds a frame unbuilt submits a job to build it,
+            # so build them first: the job count then does not depend on
+            # which thread gets there first
+            build_caches()
 
             def _path_of(tname):
                 # a "/" in the table name addresses a path relative to

@@ -68,6 +68,13 @@ def persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def build_caches() -> None:
+    """Build every registered frame now, one after another (a noop write
+    each), so that the queries reading them afterwards find them built."""
+    for df in list(_LIVE_CACHES):
+        df.write.format("noop").mode("overwrite").save()
+
+
 def release_caches() -> int:
     """Unpersist every frame :func:`persist` registered since the last
     release and return their number. Plans that still reference a released

@@ -9,6 +9,11 @@ is an append-mode parquet tier directory compatible with the batch cascade's
 files: streamed 1m rows merged to 1h equal the cascade's 1h tier bit for bit
 (tests/test_streaming.py::test_streamed_1m_merges_to_cascade_1h_tier).
 
+Null states follow the engine's one missing-state policy, written in
+``operators/spells.py``: the state counts skip them, and the spell tracker
+forward-fills over them (leading nulls open no spell), as ``spell_table``
+and the cascade's 1m spells do.
+
 Tested with the file source + ``Trigger.AvailableNow`` (deterministic, no
 wall-clock dependence); in production the source is Kafka/Iceberg CDC and
 the trigger is processingTime.

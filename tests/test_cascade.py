@@ -290,3 +290,106 @@ def test_compress_flag_is_config_drift(spark, raw, tmp_path):
             spark, raw, out, states=ROLE_ALPHABET, salt_buckets=SALT,
             job_id="jc", compress=True,
         )
+
+
+# A leading null, a null run and a trailing null (conv a), an all-null
+# conversation (b), an out-of-alphabet role (c); every conversation crosses
+# midnight. Turns are 25 s apart from 23:58:30.
+POLICY_ROLES = {
+    "a": [None, "user", "user", None, "user", None, None, "assistant",
+          "tool", None],
+    "b": [None, None, None],
+    "c": ["user", "assistant", "robot", "assistant", "system"],
+    "d": ["system", "user", "assistant", "user", "user"],
+}
+
+
+@pytest.mark.parametrize("shuffle_partitions", [1, 7])
+def test_cascade_1m_follows_the_missing_state_policy(
+    spark, tmp_path, shuffle_partitions
+):
+    """The cascade's 1m spells and transitions, merged over conv_bucket,
+    equal ``spell_table`` and ``transition_counts`` on the same turns, with
+    the declared alphabet applied (an out-of-alphabet role is missing).
+    Spells forward-fill over missing turns, transitions need both ends
+    valid."""
+    import datetime as dt
+
+    from sequenzo_spark.operators.spells import spell_table
+    from sequenzo_spark.operators.transitions import transition_counts
+
+    base = dt.datetime(2024, 1, 1, 23, 58, 30)
+    rows = [
+        (conv, i, role, f"{conv}{i}", None, base + dt.timedelta(seconds=25 * i))
+        for conv, roles in POLICY_ROLES.items()
+        for i, role in enumerate(roles)
+    ]
+    raw = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        out = str(tmp_path / "policy")
+        run_cascade(
+            spark, raw, out, states=ROLE_ALPHABET, salt_buckets=SALT,
+            job_id="jp",
+        )
+        minute = F.date_trunc("minute", "ts")
+        turns = raw.select(
+            "conv_id", "turn_idx", "ts",
+            F.when(F.col("role").isin(ROLE_ALPHABET), F.col("role")).alias("state"),
+        )
+
+        spells = spark.read.parquet(f"{out}/rollup_1m/spells").groupBy(
+            "time_bucket", "state"
+        ).agg(
+            F.sum("n_spells"), F.sum("dur_sum"), F.sum("dur_sq_sum"),
+            F.min("dur_min"), F.max("dur_max"),
+        )
+        d = F.col("duration")
+        want_spells = spell_table(
+            turns, "conv_id", "turn_idx", "state", ts_col="ts"
+        ).groupBy(F.date_trunc("minute", "ts_start"), "state").agg(
+            F.count(F.lit(1)), F.sum(d), F.sum(d * d), F.min(d), F.max(d)
+        )
+        got_spells = spells.collect()
+        assert sorted(map(tuple, got_spells)) == sorted(
+            map(tuple, want_spells.collect())
+        )
+
+        pairs = spark.read.parquet(f"{out}/rollup_1m/transitions").groupBy(
+            "time_bucket", "from_state", "to_state"
+        ).agg(F.sum("t_count").cast("double"), F.sum("w_count"))
+        want_pairs = transition_counts(
+            turns.withColumn("minute", minute), "conv_id", "turn_idx", "state",
+            bucket_col="minute",
+        ).select(
+            "minute", "from_state", "to_state", "transition_count",
+            "transition_count",
+        )
+        got_pairs = pairs.collect()
+        assert sorted(map(tuple, got_pairs)) == sorted(
+            map(tuple, want_pairs.collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    # the same answer by hand, summed over time
+    spell_totals, pair_totals = {}, {}
+    for r in got_spells:
+        n, dur = spell_totals.get(r.state, (0, 0))
+        spell_totals[r.state] = (n + r[2], dur + r[3])
+    for r in got_pairs:
+        key = (r.from_state, r.to_state)
+        pair_totals[key] = pair_totals.get(key, 0) + int(r[3])
+    assert spell_totals == {
+        "user": (4, 10), "assistant": (3, 5), "tool": (1, 2), "system": (2, 2),
+    }
+    assert pair_totals == {
+        ("user", "user"): 2, ("assistant", "tool"): 1,
+        ("user", "assistant"): 2, ("assistant", "system"): 1,
+        ("system", "user"): 1, ("assistant", "user"): 1,
+    }

@@ -58,9 +58,9 @@ def test_cosine_topk_uses_take_ordered_not_global_sort(spark):
 
 
 def test_fused_1m_rollup_shuffles_once(spark):
-    """The raw→1m window pass (lead + lag + row_number + count over one
-    (conv) partitioning) must plan exactly ONE exchange — the whole point of
-    the fused stage (aggregates.rollup_1m_fused)."""
+    """The raw→1m window pass (the transition pair's lead over one
+    (conv_bucket, conv_id) partitioning) must plan exactly ONE exchange —
+    the whole point of the fused stage (aggregates.rollup_1m_fused)."""
     from sequenzo_spark.rollup.aggregates import rollup_1m_fused, with_conv_bucket
     from sequenzo_spark.synth import generate_transcripts
 
@@ -232,24 +232,16 @@ def test_topp_selection_job_count(spark):
     extreme score) and its tie budget (how often s* appears in the top k)
     from one job: each topp query of ``driver_queries`` runs 24 Spark
     jobs end to end, two fewer than with a separate strict-count action.
-    Group-less jobs submitted in the window (engine thread pools) are
-    counted too."""
+    The scheduler's job counter sees the jobs of every thread (engine
+    thread pools too), whatever job group a reused thread carries."""
     from sequenzo_spark.driver_queries import QUERIES
 
-    sc = spark.sparkContext
-    st = sc.statusTracker()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
     for q in ("prefix_divergence_topp", "suffix_convergence_topp"):
         release_caches()
-        group = f"test-jobs-{q}"
-        loose = set(st.getJobIdsForGroup(None))
-        sc.setJobGroup(group, group)
-        try:
-            QUERIES[q](spark, SF_DIR).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        n = len(st.getJobIdsForGroup(group))
-        n += len(set(st.getJobIdsForGroup(None)) - loose)
+        first = scheduler.numTotalJobs()
+        QUERIES[q](spark, SF_DIR).collect()
+        n = scheduler.numTotalJobs() - first
         assert n == 24, (q, n)
     release_caches()
 
@@ -258,9 +250,13 @@ def test_cascade_job_count(spark, tmp_path):
     """The cascade takes its manifest rows and checksums from observations
     on its writes: no persisted outputs, no metrics job and no footer
     read-back. On this fixed input (20 conversations crossing midnight,
-    4 buckets) a full run submits 54 Spark jobs, stable run to run; the two
-    write paths it replaced took 71. The scheduler's job counter sees the
-    jobs of every thread, whatever job group a reused thread carries."""
+    4 buckets) a full run submits 49 Spark jobs; the two write paths it
+    replaced took 71. The count is stable run to run because each batch
+    builds the frames it persisted before its concurrent writes read them
+    (``session.build_caches``), and the 1m spells read the enriched cache
+    in its own (conv_bucket, conv_id) partitioning, with no shuffle before
+    the spell aggregation. The scheduler's job counter sees the jobs of
+    every thread, whatever job group a reused thread carries."""
     from sequenzo_spark.rollup.cascade import run_cascade
     from sequenzo_spark.schema import ROLE_ALPHABET
     from sequenzo_spark.synth import generate_transcripts
@@ -279,7 +275,7 @@ def test_cascade_job_count(spark, tmp_path):
     finally:
         raw.unpersist()
     n = scheduler.numTotalJobs() - first
-    assert n == 54, n
+    assert n == 49, n
 
 
 def test_tree_queries_leave_no_persisted_rdds(spark):

@@ -77,15 +77,6 @@ def test_get_xtabs(toy):
     assert got[("B", "s2")] == 2.0
 
 
-def test_index_gap_report(spark):
-    from sequenzo_spark.ingest import index_gap_report
-
-    rows = [("a", 0), ("a", 1), ("a", 3), ("b", 0), ("b", 1)]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int")
-    got = index_gap_report(df)
-    assert got == {"seqs_with_gaps": 1, "missing_positions": 1}
-
-
 def test_find_sequence_occurrences_no_concat_collision(spark):
     """['ab','c'] must NOT match ['a','bc'] — a separator-free concat would
     collide them (round-2 advisor finding; reference seqfind joins with '-',

@@ -143,3 +143,39 @@ def test_transition_pwight_keeps_single_spell_sequences(spark):
     assert got["s2"]["pwight"] == 0.0
     assert got["s2"]["n_dss_pairs"] == 0
     assert got["s1"]["n_dss_pairs"] == 1
+
+
+def test_distribution_fold_is_one_definition(spark):
+    """``derive_distribution`` (the tiers) and ``cross_sectional_entropy`` /
+    ``modal_state`` (the driver queries) give the same bits on the same
+    counts, also at a degenerate alphabet: at K = 1 ln K is 0 and
+    entropy_norm is 0.0 on both sides. An empty count frame gives no rows."""
+    import datetime as dt
+
+    from sequenzo_spark.rollup.aggregates import derive_distribution
+
+    t0, t1 = dt.datetime(2024, 1, 1, 10), dt.datetime(2024, 1, 1, 11)
+    counts = spark.createDataFrame(
+        [(t0, 0, "A", 3, 3.0), (t0, 1, "B", 1, 1.0), (t0, 1, "A", 1, 1.0),
+         (t0, 0, "C", 4, 4.0), (t1, 0, "B", 2, 2.0)],
+        "time_bucket timestamp, conv_bucket int, state string, "
+        "n_turns long, w_sum double",
+    )
+    dist = counts.groupBy("time_bucket", "state").agg(
+        F.sum("w_sum").alias("state_count")
+    )
+    for k in (1, 3):
+        tier = {r.time_bucket: r for r in derive_distribution(counts, k).collect()}
+        query = {r.time_bucket: r for r in
+                 cross_sectional_entropy(dist, n_states=k).collect()}
+        assert set(tier) == set(query) == {t0, t1}
+        for t in (t0, t1):
+            for c in ("n_valid", "entropy", "entropy_norm", "effective_states"):
+                assert tier[t][c].hex() == query[t][c].hex(), (k, t, c)
+        if k == 1:
+            assert [tier[t].entropy_norm for t in (t0, t1)] == [0.0, 0.0]
+    modal = {r.time_bucket: r for r in modal_state(dist).collect()}
+    assert (modal[t0].modal_state, modal[t0].modal_count) == ("A", 4.0)
+    assert (tier[t0].modal_state, tier[t0].modal_count) == ("A", 4.0)
+    assert modal[t0].modal_freq == 4 / 9
+    assert derive_distribution(counts.limit(0), n_states=1).count() == 0
