@@ -751,9 +751,7 @@ def q_frequent_event_subseq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequenzo_spark.operators.subsequences import frequent_subsequences
 
     ev = to_event_rows(_event_turns(spark, sf_dir))
-    out = frequent_subsequences(
-        ev, max_k=3, min_support_ratio=0.05, persist_stats=True
-    )
+    out = frequent_subsequences(ev, max_k=3, min_support_ratio=0.05)
     return out.select(
         "subseq", "k", "n_seqs", F.round("support", R).alias("support")
     )
@@ -769,9 +767,7 @@ def q_subseq_occurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = to_event_rows(_event_turns(spark, sf_dir))
-    return count_subsequence_occurrences(
-        ev, SUBSEQ_PATTERNS, method="count", persist_stats=True
-    )
+    return count_subsequence_occurrences(ev, SUBSEQ_PATTERNS, method="count")
 
 
 def q_subseq_group_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,12 +782,10 @@ def q_subseq_group_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups = turns.select("seq_id").distinct().select(
         "seq_id", (F.col("seq_id") % 2).alias("group")
     )
-    # persist_stats: the per-event aggregate feeds one cnt_df branch per
-    # pattern plus the dense-seqs frame — uncached it re-derived the whole
-    # event window pipeline once per pattern
-    out = compare_group_subsequences(
-        ev, groups, SUBSEQ_PATTERNS, persist_stats=True
-    )
+    # the operator persists its per-event aggregate: it feeds one cnt_df
+    # branch per pattern plus the dense-seqs frame, and uncached it would
+    # re-derive the whole event window pipeline once per pattern
+    out = compare_group_subsequences(ev, groups, SUBSEQ_PATTERNS)
     return out.select(
         "subseq",
         F.round("statistic", R).alias("statistic"),
@@ -836,9 +830,7 @@ def q_prefix_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequenzo_spark.operators.prefix_tree import prefix_divergence
 
     turns = _event_turns(spark, sf_dir)
-    out = prefix_divergence(
-        turns, z_threshold=1.0, min_t=2, window=2, persist_stats=True
-    )
+    out = prefix_divergence(turns, z_threshold=1.0, min_t=2, window=2)
     return out.select(
         "seq_id",
         F.round("std_score", R).alias("std_score"),
@@ -904,9 +896,7 @@ def q_suffix_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequenzo_spark.operators.suffix_tree import suffix_convergence
 
     turns = _event_turns(spark, sf_dir)
-    out = suffix_convergence(
-        turns, z_threshold=1.0, min_t=1, window=2, persist_stats=True
-    )
+    out = suffix_convergence(turns, z_threshold=1.0, min_t=1, window=2)
     return out.select(
         "seq_id",
         F.round("std_score", R).alias("std_score"),
@@ -925,8 +915,7 @@ def q_suffix_convergence_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     turns = _event_turns(spark, sf_dir)
     out = suffix_convergence(
-        turns, min_t=1, window=1, method="top_proportion", proportion=0.2,
-        persist_stats=True,
+        turns, min_t=1, window=1, method="top_proportion", proportion=0.2
     )
     return out.select(
         "seq_id",
@@ -946,8 +935,7 @@ def q_prefix_divergence_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     turns = _event_turns(spark, sf_dir)
     out = prefix_divergence(
-        turns, min_t=2, window=1, method="top_proportion", proportion=0.2,
-        persist_stats=True,
+        turns, min_t=2, window=1, method="top_proportion", proportion=0.2
     )
     return out.select(
         "seq_id",

@@ -18,9 +18,11 @@ is the \\x1f-joined state string (portable to the SQL oracle;
 collision-free). Its length grows with depth, so the (t, key) shuffle
 carries O(depth) bytes per row — at extreme depths ``hashed=True`` swaps
 it for the incremental xxhash64 chain (_hashed_key_rows: same plan,
-constant-width 8-byte keys, loses oracle portability). Per-seq float sums
-fold in level order (deterministic bits at any parallelism — the
-engine-wide reduction rule).
+constant-width 8-byte keys, loses oracle portability). Every float
+reduction folds in a fixed order, so each output bit is the same at any
+parallelism (the engine-wide reduction rule): per-seq sums fold in level
+order, and the per-level z moments fold an exact (freq → count) histogram
+in freq order (``zscores``).
 """
 
 from __future__ import annotations
@@ -194,11 +196,11 @@ def rarity_rows(
     hashed: bool = False,
     from_end: bool = False,
 ) -> DataFrame:
-    """(seq_id, [group], t, r) with r = −ln(freq/N + 1e-10)."""
+    """(seq_id, [group], t, freq, r) with r = −ln(freq/N + 1e-10)."""
     gcols = [group_col] if group_col else []
     return _freq_rows(
         df, seq_col, order_col, state_col, group_col, hashed, from_end
-    ).select("seq_id", *gcols, "t", _rarity().alias("r"))
+    ).select("seq_id", *gcols, "t", "freq", _rarity().alias("r"))
 
 
 def rarity_fold(
@@ -238,32 +240,39 @@ def zscores(rar: DataFrame, gcols: list[str]) -> DataFrame:
     level (within group) with SAMPLE std (ddof=1); null z at zero-variance
     and single-row levels.
 
-    Per-level moments are plain partial-aggregating sums: O(1) state per
-    task (an ordered-fold collect_list would hold all N sequences'
-    rarities in ONE aggregation buffer). Variance uses the TWO-PASS form
-    Σ(r−m)²/(cnt−1): the one-pass s2−2m·s1+cnt·m² cancels catastrophically
-    near zero variance and its sign then flips with partial-sum order
-    (run-to-run AND engine-vs-oracle) — sqrt(negative-ulp) = NaN z.
-    Two-pass keeps the sum non-negative and its order sensitivity
-    relative-tiny. Zero variance is the exact test min == max (finite
-    doubles, no NaN) — a plain partial aggregate, where a distinct count
-    would double the aggregation over the rarity rows."""
+    The moments come from an EXACT per-level histogram, so their bits do
+    not depend on how Spark partitions the rows. Within a level, r is a
+    function of freq alone, so grouping by (level, freq) gives an exact
+    long count n per distinct r. Each level's (freq, n, r) structs are then
+    sorted and folded in freq order: cnt = Σn, m = Σn·r / cnt, ss =
+    Σn·(r−m)² (the two-pass form: the one-pass s2−2m·s1+cnt·m² cancels
+    catastrophically near zero variance). The array is bounded: its d
+    distinct freq values sum to at most N, so d ≤ √(2N). Zero variance is
+    exactly one distinct freq (size 1), which also covers cnt == 1. One
+    broadcast join puts z back on the rarity rows."""
     kcols = gcols + ["t"]
-    mstats = rar.groupBy(*kcols).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("r").alias("s1"),
-        (F.min("r") == F.max("r")).alias("zv"),
-    )
-    dev = F.col("r") - F.col("s1") / F.col("cnt")
-    stats = (
-        rar.join(F.broadcast(mstats), kcols)
+    hist = (
+        rar.groupBy(*kcols, "freq")
+        .agg(F.count(F.lit(1)).alias("n"), F.max("r").alias("r"))
         .groupBy(*kcols)
-        .agg(F.sum(dev * dev).alias("ss"))
-        .join(F.broadcast(mstats), kcols)
+        .agg(
+            F.array_sort(F.collect_list(F.struct("freq", "n", "r"))).alias("_h")
+        )
     )
-    z = F.when(
-        F.col("zv") | (F.col("cnt") < 2), F.lit(None).cast("double")
-    ).otherwise(dev / F.sqrt(F.col("ss") / (F.col("cnt") - 1)))
+    cnt = F.aggregate("_h", F.lit(0).cast("long"), lambda acc, h: acc + h["n"])
+    s1 = F.aggregate("_h", F.lit(0.0), lambda acc, h: acc + h["n"] * h["r"])
+    # m is referenced twice below, so the optimizer keeps it in this
+    # projection instead of re-folding it inside the ss lambda
+    moments = hist.select(*kcols, "_h", cnt.alias("cnt"), (s1 / cnt).alias("m"))
+
+    def sq_dev(h):
+        d = h["r"] - F.col("m")
+        return d * d
+
+    ss = F.aggregate("_h", F.lit(0.0), lambda acc, h: acc + h["n"] * sq_dev(h))
+    sd = F.when(F.size("_h") > 1, F.sqrt(ss / (F.col("cnt") - 1)))
+    stats = moments.select(*kcols, "m", sd.alias("sd"))
+    z = (F.col("r") - F.col("m")) / F.col("sd")
     return rar.join(F.broadcast(stats), kcols).select(
         "seq_id", *gcols, "t", z.alias("z")
     )
@@ -307,7 +316,6 @@ def divergence(
     order_col: str,
     state_col: str,
     group_col: str | None,
-    persist_stats: bool,
     hashed: bool = False,
 ) -> DataFrame:
     """seq_id, [group], std_score, flag, first_t — the z-score window
@@ -324,13 +332,11 @@ def divergence(
     if max_t is not None and max_t < min_t:
         raise ValueError("max_t must be >= min_t")
     gcols = [group_col] if group_col else []
-    rar = rarity_rows(
-        df, seq_col, order_col, state_col, group_col, hashed, from_end
+    # rar feeds both the per-level histogram and the z re-join; without
+    # the cache the window+join chain runs twice
+    rar = persist(
+        rarity_rows(df, seq_col, order_col, state_col, group_col, hashed, from_end)
     )
-    if persist_stats:
-        # rar feeds both the per-level moment aggregate and the z re-join;
-        # without the cache the window+join chain runs twice
-        rar = persist(rar)
     # scan in year order: depth for prefixes; for suffixes year
     # L − t + 1, i.e. descending suffix length
     order = -F.col("t") if from_end else F.col("t")

@@ -28,7 +28,7 @@ sequence (or group) count — for equal-length inputs the numbers coincide
 with the reference's.
 
 The computation is the direction-parameterized core in ``_tree`` run
-forwards (from_end=False): rows → freq → rarity → two-pass z → window scan
+forwards (from_end=False): rows → freq → rarity → histogram z → window scan
 → selection; this module names the columns.
 """
 
@@ -78,7 +78,6 @@ def prefix_divergence(
     order_col: str = "pos",
     state_col: str = "state",
     group_col: str | None = None,
-    persist_stats: bool = False,
     hashed: bool = False,
 ) -> DataFrame:
     """Individual divergence via the reference's z-score window method
@@ -89,8 +88,8 @@ def prefix_divergence(
     rarity(i,t) = −ln(freq(prefix_{i,t})/N + 1e-10)  (the divergence paths'
     epsilon, :252); z(i,t) standardizes rarity across individuals per depth
     with SAMPLE std (ddof=1, pandas default, :700); zero-variance depths
-    (all rarities equal — detected exactly by min == max, not a float
-    threshold) and single-row depths give null z. Then per individual, over
+    (all rarities equal — detected exactly as one distinct frequency, not
+    a float threshold) and single-row depths give null z. Then per individual, over
     start depths p ∈ [min_t, T−window+1], windows of ``window`` consecutive
     z's skipping any window containing null:
 
@@ -107,12 +106,12 @@ def prefix_divergence(
     threshold (mirror of the suffix module's per_t_window_max logic).
 
     Output: seq_id, std_score (null when no valid window), diverged,
-    first_divergence_t. Per-depth moments are plain partial-aggregating
-    sums (bounded task state; commutative-sum order costs at most last-ulp
-    bits, inside the published rounding) and the per-seq window scan folds
-    in depth order. Variable-length inputs generalize the reference's
-    equal-T requirement: depth-t stats cover the sequences long enough to
-    reach t.
+    first_divergence_t. Per-depth moments fold an exact per-depth
+    histogram of the rarity values in a fixed order (``_tree.zscores``)
+    and the per-seq window scan folds in depth order, so every output bit
+    is independent of partitioning. Variable-length inputs generalize the
+    reference's equal-T requirement: depth-t stats cover the sequences
+    long enough to reach t.
 
     ``group_col`` (constant within a sequence) switches to the reference's
     within-group variant (_compute_converged_by_group's prefix mirror and
@@ -122,7 +121,7 @@ def prefix_divergence(
     return _tree.divergence(
         df, False, z_threshold, min_t, max_t, window, inclusive, method,
         proportion, quantile_p, min_count, seq_col, order_col, state_col,
-        group_col, persist_stats, hashed,
+        group_col, hashed,
     ).withColumnsRenamed({"flag": "diverged", "first_t": "first_divergence_t"})
 
 

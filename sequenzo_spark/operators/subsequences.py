@@ -27,9 +27,8 @@ K² rows per sequence and k=3 K³ — bounded by the alphabet, not the data —
 and candidate patterns EMERGE from the joins (a pattern absent everywhere
 never materializes), so no driver-side alphabet enumeration is needed.
 All shuffles are keyed by seq_id; no UDFs. The per-event aggregate
-feeds 1-3 joins per call; pass persist_stats=True to cache it for the
-call's duration at production scale (plans stay pure by default; the
-cached table is released with ``session.release_caches``).
+feeds several joins per call, so every call persists it through the
+session's cache registry (released with ``session.release_caches``).
 """
 
 from __future__ import annotations
@@ -51,7 +50,18 @@ def _per_event_stats(
     positions: bool = False,
 ) -> DataFrame:
     """(seq_id, event) → first/last position, count [, sorted positions
-    array, per-seq weight]. The single aggregate every mining join reuses."""
+    array, per-seq weight]. The single aggregate every mining join reuses.
+
+    Patterns print as "(a)-(b)-(c)", so an event label containing the
+    separator ")-(" would make distinct event tuples print as one pattern
+    (and could not be parsed back): such a label raises an error."""
+    ev = F.col(event_col)
+    ev = F.when(
+        ev.contains(")-("),
+        F.raise_error(
+            F.concat(F.lit("event label contains the pattern separator ')-(': "), ev)
+        ),
+    ).otherwise(ev)
     aggs = [
         F.min(order_col).alias("fp"),
         F.max(order_col).alias("lp"),
@@ -61,9 +71,9 @@ def _per_event_stats(
         aggs.append(F.sort_array(F.collect_list(order_col)).alias("ps"))
     if weight_col:
         aggs.append(F.first(weight_col).alias("w"))
-    return events.groupBy(
-        F.col(seq_col).alias("seq_id"), F.col(event_col).alias("event")
-    ).agg(*aggs)
+    return events.groupBy(F.col(seq_col).alias("seq_id"), ev.alias("event")).agg(
+        *aggs
+    )
 
 
 def _fmt1(e) -> F.Column:
@@ -79,7 +89,6 @@ def frequent_subsequences(
     order_col: str = "pos",
     event_col: str = "event",
     weight_col: str | None = None,
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Frequent subsequences of length 1..max_k (max_k ≤ 4) with presence
     (COBJ) support — find_frequent_subsequences semantics (core.py:601,
@@ -102,11 +111,11 @@ def frequent_subsequences(
         raise ValueError("max_k must be 1..4")
     if min_support is None and min_support_ratio is None:
         raise ValueError("specify min_support or min_support_ratio")
-    pe = _per_event_stats(
-        events, seq_col, order_col, event_col, weight_col, positions=(max_k >= 3)
+    pe = persist(
+        _per_event_stats(
+            events, seq_col, order_col, event_col, weight_col, positions=(max_k >= 3)
+        )
     )
-    if persist_stats:
-        pe = persist(pe)
     # the self-joins below co-key on seq_id with Kᵏ-row fan-out; sort-merge
     # measures ~20% faster than the session default shuffled-hash here (the
     # build-side hashmap over the full per-event table costs more than the
@@ -319,7 +328,6 @@ def count_subsequence_occurrences(
     seq_col: str = "seq_id",
     order_col: str = "pos",
     event_col: str = "event",
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Per-sequence occurrence counts of the given patterns —
     count_subsequence_occurrences semantics (core.py:702).
@@ -340,11 +348,9 @@ def count_subsequence_occurrences(
     if method not in ("presence", "count"):
         raise ValueError("method must be 'presence' or 'count'")
     parsed = [(p, parse_subsequence(p)) for p in patterns]
-    pe = _per_event_stats(
-        events, seq_col, order_col, event_col, positions=True
+    pe = persist(
+        _per_event_stats(events, seq_col, order_col, event_col, positions=True)
     )
-    if persist_stats:
-        pe = persist(pe)
     seqs = pe.select("seq_id").distinct()
 
     outs = []
@@ -431,7 +437,6 @@ def compare_group_subsequences(
     order_col: str = "pos",
     event_col: str = "event",
     group_col: str = "group",
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Chi-square association between pattern presence and a group label —
     compare_groups semantics (core.py:785, _chi_square_tests :1614): a
@@ -446,8 +451,7 @@ def compare_group_subsequences(
     caller (the reference delegates it to scipy's chi2 CDF); ranking by
     statistic at fixed dof gives the same ordering."""
     pres = count_subsequence_occurrences(
-        events, patterns, "presence", seq_col, order_col, event_col,
-        persist_stats=persist_stats,
+        events, patterns, "presence", seq_col, order_col, event_col
     )
     g = groups.select(
         F.col(seq_col).alias("seq_id"), F.col(group_col).alias("group")

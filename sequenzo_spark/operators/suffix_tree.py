@@ -176,7 +176,6 @@ def suffix_convergence(
     order_col: str = "pos",
     state_col: str = "state",
     group_col: str | None = None,
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Individual convergence — the suffix mirror of prefix_divergence
     (IndividualConvergence.compute_converged /
@@ -185,7 +184,7 @@ def suffix_convergence(
 
     rarity(i,k) = −ln(freq(suffix_{i,k})/N + 1e-10); z(i,k) standardizes
     rarity across individuals per level k with SAMPLE std (ddof=1);
-    zero-variance levels (exact min == max test) and single-row
+    zero-variance levels (exactly one distinct frequency) and single-row
     levels give null z. Per individual the z's are scanned in YEAR order
     (t = L_i − k + 1, i.e. start position of the suffix): over start
     years p ∈ [min_t, L−window+1], windows of ``window`` consecutive z's
@@ -210,7 +209,7 @@ def suffix_convergence(
     return _tree.divergence(
         df, True, z_threshold, min_t, max_t, window, inclusive, method,
         proportion, quantile_p, min_count, seq_col, order_col, state_col,
-        group_col, persist_stats,
+        group_col,
     ).withColumnsRenamed({"flag": "converged", "first_t": "first_convergence_t"})
 
 

@@ -19,8 +19,6 @@ Python in the hot path):
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from sequenzo_spark.session import (  # noqa: F401  (public name)
@@ -100,7 +98,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_shingle_df: int | None = 10_000,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Exact near-dup pairs with word-n-gram Jaccard ≥ threshold.
 
@@ -111,22 +108,7 @@ def ngram_jaccard_pairs(
     Denominators keep the full shingle-set sizes, so capped Jaccard is a
     lower bound of true Jaccard; pairs whose similarity lives on rare
     shingles are still found exactly. Default 10k: inert at test scale,
-    bounds any single shingle's join fan-out to 10⁸ rows at 100 TB.
-
-    ``prefix_filter=True`` switches candidate generation to the classic
-    prefix filter (Bayardo et al., WWW'07 "Scaling Up All Pairs Similarity
-    Search"): under a common rarest-first total order, any pair with capped
-    Jaccard ≥ τ must share a shingle inside both docs' first
-    |capped| − ⌈τ·|full|⌉ + 1 shingles, so the quadratic self-join runs on
-    ~(1−τ) of the rows and the exact capped intersection is recomputed from
-    per-doc capped arrays (identical output, proven by the overlap bound
-    i ≥ ⌈τ·|a|⌉, computed exactly in decimal, plus pigeonhole;
-    differential-tested against the direct join on four corpora including a
-    250k-pair near-dup stress set and pairs exactly at τ). This
-    is the production default for large corpora — at 10× bench scale it is
-    ~25% faster and the gap widens with corpus size; the direct join stays
-    the default because its fewer stages win at small scale (the declared
-    bench query's regime)."""
+    bounds any single shingle's join fan-out to 10⁸ rows at 100 TB."""
     sh = _shingle_rows(docs, text_col, id_col, n)
     # explode_outer, not explode: InferFiltersFromGenerate synthesizes a
     # size(sh)>0 filter for plain explode, and filter pushdown then
@@ -152,61 +134,6 @@ def ngram_jaccard_pairs(
     keep = F.col("df") >= 2
     if max_shingle_df:
         keep = keep & (F.col("df") <= max_shingle_df)
-    if prefix_filter:
-        exf = ex.filter(keep)
-        # per-doc capped shingles sorted rarest-first by (df, s); c stays
-        # the FULL set size so capped-Jaccard semantics are unchanged
-        docagg = exf.groupBy("doc_id").agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("s")))
-            ).alias("_a"),
-            F.first("c").alias("c"),
-        )
-        sa = F.transform(F.col("_a"), lambda x: x["s"])
-        # prefix length p = |capped| − ⌈τ·|full|⌉ + 1; p ≤ 0 ⇒ the doc
-        # cannot reach the required overlap ⌈τ·|full|⌉ with any partner.
-        # The ceiling is exact: τ as the decimal it was written as, times
-        # the integer |full| (a double product can round 0.55·100 up to 56)
-        need = F.ceil(
-            F.col("c").cast("decimal(10,0)") * F.lit(Decimal(str(threshold)))
-        )
-        p = (F.size("_a") - need + 1).cast("int")
-        docagg = docagg.select("doc_id", sa.alias("_s"), "c", p.alias("_p"))
-        pref = docagg.filter(F.col("_p") > 0).select(
-            "doc_id", F.explode(F.slice("_s", 1, F.col("_p"))).alias("s")
-        )
-        pa, pb = pref.alias("a"), pref.alias("b")
-        cand = (
-            pa.join(
-                pb,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-            )
-            .distinct()
-        )
-        j = cand.join(
-            docagg.select(
-                F.col("doc_id").alias("d1"),
-                F.col("_s").alias("s1"),
-                F.col("c").alias("c1"),
-            ),
-            "d1",
-        ).join(
-            docagg.select(
-                F.col("doc_id").alias("d2"),
-                F.col("_s").alias("s2"),
-                F.col("c").alias("c2"),
-            ),
-            "d2",
-        )
-        inter = F.size(F.array_intersect("s1", "s2"))
-        jac = inter / (F.col("c1") + F.col("c2") - inter)
-        return j.select("d1", "d2", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
     ex = ex.filter(keep).drop("df")
     a = ex.alias("a")
     b = ex.alias("b")
@@ -367,13 +294,20 @@ def _simhash_count_rows(
     aggregation collapses each doc to one 64-long row before the shuffle
     (guide §2.3 — aggregate before you shuffle). Counter values are exact
     integers, so the result is bit-identical to the fold. ``hi_lo(tok)``
-    returns the (hi, lo) column pair for one token."""
-    ex = _spread(docs).filter(F.col(text_col).isNotNull()).select(
+    returns the (hi, lo) column pair for one token.
+
+    The counters are keyed per input ROW (``_row``), not per doc_id: two
+    rows sharing an id each get the fingerprint of their own text."""
+    rows = _spread(docs).filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"),
-        F.explode_outer(tokens_col(text_col)).alias("_t"),
+        F.monotonically_increasing_id().alias("_row"),
+        F.col(text_col),
+    )
+    ex = rows.select(
+        "doc_id", "_row", F.explode_outer(tokens_col(text_col)).alias("_t")
     )
     hi, lo = hi_lo(F.col("_t"))
-    ex = ex.select("doc_id", hi.alias("_hi"), lo.alias("_lo"))
+    ex = ex.select("doc_id", "_row", hi.alias("_hi"), lo.alias("_lo"))
     aggs = []
     for b in range(64):
         src = F.col("_lo") if b < 32 else F.col("_hi")
@@ -383,7 +317,7 @@ def _simhash_count_rows(
             .cast("long")
             .alias(f"_c{b}")
         )
-    cnt = ex.groupBy("doc_id").agg(*aggs)
+    cnt = ex.groupBy("doc_id", "_row").agg(*aggs)
     return cnt.select(
         "doc_id", F.array(*[F.col(f"_c{b}") for b in range(64)]).alias("_c")
     )

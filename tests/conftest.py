@@ -1,6 +1,7 @@
 import pytest
 
 from sequenzo_spark import get_spark
+from sequenzo_spark.session import release_caches
 
 
 @pytest.fixture(scope="session")
@@ -8,6 +9,15 @@ def spark():
     s = get_spark("sequenzo-spark-tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_caches_after_test():
+    """The tree and subsequence operators persist their intermediate
+    frames; a test that fails before releasing them must not leave them
+    registered for the next test (a cascade would build them as its own)."""
+    yield
+    release_caches()
 
 
 @pytest.fixture(scope="session")

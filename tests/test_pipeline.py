@@ -211,31 +211,28 @@ def test_simhash_hilo_matches_python_md5_reference(spark):
         assert got[doc_id] == want, doc_id
 
 
-def test_ngram_prefix_filter_mode_identical(spark, docs):
-    """prefix_filter=True (Bayardo-style candidate generation + capped-array
-    rescore) must produce BIT-IDENTICAL pairs and Jaccard values to the
-    direct self-join, at several thresholds (the completeness proof's
-    overlap bound i >= ceil(tau*|full|) is exercised at each)."""
-    for tau in (0.5, 0.8, 0.9):
-        direct = sorted(
-            tuple(r) for r in ngram_jaccard_pairs(docs, threshold=tau).collect()
-        )
-        pf = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(
-                docs, threshold=tau, prefix_filter=True
-            ).collect()
-        )
-        assert direct == pf, (tau, len(direct), len(pf))
-        assert len(direct) > 0  # planted near-dups exist at every tau here
+def test_simhash_keeps_rows_with_a_shared_doc_id_apart(spark):
+    """Two rows under one doc_id each get the fingerprint of their own
+    text: the bit counters are keyed per input row, not per doc_id."""
+    from sequenzo_spark.pipeline.dedup import simhash64_hilo
+
+    texts = ["the quick brown fox jumps", "lorem ipsum dolor sit amet"]
+    apart = spark.createDataFrame(
+        [(1, texts[0]), (2, texts[1])], "doc_id long, text string"
+    )
+    shared = spark.createDataFrame(
+        [(7, texts[0]), (7, texts[1])], "doc_id long, text string"
+    )
+    for fn in (simhash64, simhash64_hilo):
+        want = sorted((7, *r[1:]) for r in fn(apart).collect())
+        got = sorted(tuple(r) for r in fn(shared).collect())
+        assert got == want, fn.__name__
 
 
-def test_ngram_prefix_filter_keeps_pairs_at_the_threshold(spark):
+def test_ngram_jaccard_keeps_pairs_at_the_threshold(spark):
     """A 100-shingle doc and a 55-shingle doc inside it have Jaccard
-    55/100, exactly τ = 0.55, and the direct join keeps the pair. Their
-    overlap is exactly ⌈τ·100⌉ = 55, so the prefix bound must be that exact
-    ceiling: in doubles, 0.55·100 = 55.000000000000007 rounds up to 56 and
-    leaves the big doc an empty prefix."""
+    55/100, exactly τ = 0.55: the pair is emitted (the comparison is ≥ on
+    the same double)."""
     words = [f"w{i}" for i in range(102)]
     other = [f"v{i}" for i in range(102)]
     docs = spark.createDataFrame(
@@ -247,14 +244,7 @@ def test_ngram_prefix_filter_keeps_pairs_at_the_threshold(spark):
         ],
         "doc_id string, text string",
     )
-    direct = sorted(
+    got = sorted(
         tuple(r) for r in ngram_jaccard_pairs(docs, threshold=0.55).collect()
     )
-    pf = sorted(
-        tuple(r)
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.55, prefix_filter=True
-        ).collect()
-    )
-    assert direct == [("a", "b", 0.55), ("c", "d", 0.55)]
-    assert pf == direct
+    assert got == [("a", "b", 0.55), ("c", "d", 0.55)]

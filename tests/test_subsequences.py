@@ -361,3 +361,15 @@ def test_mining_k4(spark):
     assert out["(A)-(B)-(C)-(D)"] == 1.0
     assert out["(A)-(C)-(B)-(D)"] == 1.0
     assert "(B)-(A)-(C)-(D)" not in out
+
+
+def test_event_labels_with_the_pattern_separator_are_rejected(spark):
+    """Patterns format as "(a)-(b)-(c)", so a label containing ")-(" makes
+    distinct event tuples print as one subseq: here ("x)-(y", "z", "w")
+    and ("x", "y)-(z", "w") are both "(x)-(y)-(z)-(w)" at k=3. Such
+    labels are refused with an error naming the separator."""
+    ev = _events_df(spark, [["x)-(y", "z", "w"], ["x", "y)-(z", "w"]])
+    with pytest.raises(Exception, match=r"\)-\("):
+        frequent_subsequences(ev, max_k=3, min_support=1).collect()
+    with pytest.raises(Exception, match=r"\)-\("):
+        count_subsequence_occurrences(ev, ["(x)-(w)"]).collect()

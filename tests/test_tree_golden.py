@@ -5,8 +5,14 @@ single-row levels, sequences shorter than min_t + window − 1, two groups)
 is run through each public tree operator and its method / group /
 inclusive / max_t / hashed variants. Rows are compared exactly, floats as
 ``float.hex``, together with each output schema. Each case is built and
-collected against an empty cache: a frame another case persisted could
-otherwise stand in for an identical sub-plan and reorder its float sums.
+collected against an empty cache, so no case reads a frame another case
+persisted.
+
+The outputs must not depend on how Spark partitions the rows: the golden
+is checked at 1, 4 and 13 shuffle partitions with AQE's partition
+coalescing off (with it on, the tiny input collapses into one partition
+and hides an order-dependent float fold), and the driver queries that run
+the tree and subsequence operators must hash the same at 1 and 13.
 
 Regenerate (only when an output change is intended):
 
@@ -15,11 +21,26 @@ Regenerate (only when an output change is intended):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+from contextlib import contextmanager
 from functools import partial
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "tree_golden.json")
+SF_DIR = "/root/testdata/sf0.001"
+
+#: driver queries over the tree and subsequence operators, which persist
+#: their intermediate frames and fold per-level moments
+DRIVER_QUERIES = (
+    "frequent_event_subseq",
+    "subseq_occurrence_counts",
+    "subseq_group_chisq",
+    "prefix_divergence",
+    "prefix_divergence_topp",
+    "suffix_convergence",
+    "suffix_convergence_topp",
+)
 
 _SEQS = {
     "s01": ("g1", "ABABC"),
@@ -113,9 +134,9 @@ def _cases(df):
                         cases[f"{name}/{method}/group={g}/hashed"] = partial(
                             fn, df, hashed=True, **kw
                         )
-        cases[f"{name}/top_proportion/persist_stats"] = partial(
+        cases[f"{name}/top_proportion/min_count=1"] = partial(
             fn, df, z_threshold=0.5, min_t=min_t, window=2,
-            method="top_proportion", proportion=0.3, persist_stats=True,
+            method="top_proportion", proportion=0.3,
         )
     return cases
 
@@ -124,27 +145,64 @@ def _enc(v):
     return v.hex() if isinstance(v, float) else v
 
 
+def _rows(frame) -> list:
+    return sorted(
+        ([_enc(v) for v in r] for r in frame.collect()),
+        key=lambda r: json.dumps(r),
+    )
+
+
 def capture(spark) -> dict:
     out = {}
     for name, build in _cases(_input(spark)).items():
         spark.catalog.clearCache()
         frame = build()
-        rows = sorted(
-            ([_enc(v) for v in r] for r in frame.collect()),
-            key=lambda r: json.dumps(r),
-        )
-        out[name] = {"schema": frame.schema.simpleString(), "rows": rows}
+        out[name] = {"schema": frame.schema.simpleString(), "rows": _rows(frame)}
     spark.catalog.clearCache()
     return out
+
+
+@contextmanager
+def _partitions(spark, n: int):
+    """Run with ``n`` shuffle partitions and AQE coalescing off, then
+    restore both settings."""
+    keys = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_tree_outputs_match_golden(spark):
     with open(GOLDEN) as f:
         want = json.load(f)
-    got = capture(spark)
-    assert sorted(got) == sorted(want)
-    for name in want:
-        assert got[name] == want[name], name
+    for n in (1, 4, 13):
+        with _partitions(spark, n):
+            got = capture(spark)
+        assert sorted(got) == sorted(want), n
+        assert [k for k in want if got[k] != want[k]] == [], n
+
+
+def test_driver_queries_do_not_depend_on_partitioning(spark):
+    from sequenzo_spark.driver_queries import QUERIES
+
+    digests = {}
+    for n in (1, 13):
+        with _partitions(spark, n):
+            digests[n] = {
+                q: hashlib.sha256(
+                    json.dumps(_rows(QUERIES[q](spark, SF_DIR))).encode()
+                ).hexdigest()
+                for q in DRIVER_QUERIES
+            }
+    assert digests[1] == digests[13]
 
 
 if __name__ == "__main__":
